@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.ops.{IvfCodec, IvfStore}
+import graft.ops.Similarity.{IvfIndex, IvfPqIndex}
 import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
 
 /** The ONE operational maintenance entry point — the cron loop a
@@ -9,15 +11,15 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   * stage debris and superseded layouts accumulated until someone did).
   * One invocation sweeps, in dependency order:
   *
-  *   1. '''versioned ANN serving stores''' — float IVF, SQ8 and PQ
-  *      homes all carry the same `v<NNNNNNNN>`/atomic-rename store
-  *      since r16 ([[graft.ops.Similarity.vacuumIvfVersions]]): all
-  *      but the newest `keepVersions` versions + crashed-rebuild
-  *      `.tmp-*` stagings — swept BEFORE the layout vacuum so version
-  *      GC never races the reclamation of its own parent directory.
-  *      Under `--compact-ivf` a fragmented store republishes coalesced
-  *      as v+1, and a fragmented pre-versioned FLAT home (the r12
-  *      shape) MIGRATES: rows republished as v1, flat dirs reclaimed;
+  *   1. '''ANN serving stores''' — the float IVF, SQ8 and PQ homes
+  *      each hold one [[graft.ops.IvfStore]] (float codec for IVF and
+  *      SQ8, PQ codec for PQ): its fragmentation is probed, and
+  *      [[graft.ops.IvfStore.vacuum]] reclaims all but the newest
+  *      `keepVersions` versions + crashed-publish `.tmp-*` stagings —
+  *      swept BEFORE the layout vacuum so version GC never races the
+  *      reclamation of its own parent directory. Under `--compact-ivf`
+  *      a fragmented store republishes coalesced as v+1
+  *      ([[graft.ops.IvfStore.compact]]);
   *   2. '''serving layouts''' ([[ServingLayouts.vacuum]]): dedup/ANN
   *      layout homes no process has served from within the retention
   *      window, plus crashed builders' `.stage-*`/`.debris-*` dirs;
@@ -42,7 +44,7 @@ import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
   *     [--cache-ttl-ms N]
   *     [--scratch-age-ms N]    retention for dead scratch roots (default 7d)
   *     [--compact-ivf]         compact fragmented serving stores (ivf/sq8/pq)
-  *                             before their vacuum; migrates legacy flat homes
+  *                             before their vacuum
   * }}}
   *
   * Prints ONE JSON line of reclaimed counts. Liveness contract: every
@@ -58,8 +60,7 @@ object Maintain {
                     scratchRoots: Int = 0,
                     ivfFragmentation: Option[(Long, Long, Boolean)] = None,
                     sq8Fragmentation: Option[(Long, Long, Boolean)] = None,
-                    pqFragmentation: Option[(Long, Long, Boolean)] = None,
-                    legacyFlatReclaimed: Int = 0) {
+                    pqFragmentation: Option[(Long, Long, Boolean)] = None) {
     def json(corpusDir: String): String = {
       val drift = geometryDrift match {
         case Some((stored, derived, rec)) =>
@@ -74,7 +75,6 @@ object Maintain {
       s"""{"metric":"maintain","corpus":"$corpusDir","ivf_versions_reclaimed":$ivfVersions,""" +
         s""""layouts_reclaimed":$layouts,"snapshot_files_reclaimed":$snapshots,""" +
         s""""cache_dirs_reclaimed":$cacheDirs,"scratch_roots_reclaimed":$scratchRoots,""" +
-        s""""legacy_flat_reclaimed":$legacyFlatReclaimed,""" +
         s""""ivf_geometry":$drift,"ivf_fragmentation":${fragJson(ivfFragmentation)},""" +
         s""""sq8_fragmentation":${fragJson(sq8Fragmentation)},""" +
         s""""pq_fragmentation":${fragJson(pqFragmentation)}}"""
@@ -91,113 +91,34 @@ object Maintain {
           cacheTtlMs: Long = 300000L,
           scratchAgeMs: Long = 7L * 24 * 3600 * 1000,
           compactIvfStore: Boolean = false): Report = {
-    // Fragmentation probe FIRST (pre-sweep state — the signal that
-    // justifies action, reported as found): continuous ingest and
-    // append-accumulating builds add files per cell, so files/cell
-    // grows with history and serving latency becomes file-open
-    // overhead (measured, r15: 46 k slivers put ~15 s on every serving
-    // batch at sf10). Threshold 8 files/cell ≈ where the measured
-    // ~0.3 ms/open overhead reached scan parity.
-    import java.nio.file.{Files, Paths}
-    def countCellFiles(dataDir: java.nio.file.Path): (Long, Long) = {
-      var files = 0L
-      var cells = 0L
-      if (Files.isDirectory(dataDir)) {
-        val s = Files.list(dataDir)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.foreach { p =>
-            if (p.getFileName.toString.startsWith("cell=")) {
-              cells += 1
-              val c = Files.list(p)
-              try files += c.iterator().asScala
-                .count(_.getFileName.toString.endsWith(".parquet"))
-              finally c.close()
-            }
-          }
-        } finally s.close()
-      }
-      (files, cells)
-    }
-    def fragOf(fc: (Long, Long)): (Long, Long, Boolean) =
-      (fc._1, fc._2, fc._2 > 0 && fc._1 > fc._2 * 8)
-
-    // Probe + (under --compact-ivf, when fragmented) compact + version
-    // vacuum, PER SERVING STORE — all three families (float ivf, sq8,
-    // pq) carry versioned stores since r16. A pre-versioned FLAT home
-    // (the r12 shape: data dirs at the home top level) is probed the
-    // same way and, when --compact-ivf finds it fragmented, MIGRATED:
-    // its rows republish coalesced as v1 of the versioned store and
-    // the superseded flat dirs are reclaimed. The migration trade is
-    // the vacuum's own: a concurrent server still holding the flat
-    // reader loses its files and rebuilds on its next serve — run on
-    // the owner's cadence. Compaction stays GATED on the probe (r15
-    // review: an unconditional republish would full-rewrite the corpus
-    // per cron tick forever); with the default keepIvfVersions=2 the
-    // fragmented version survives one extra cycle for pinned readers —
-    // pass --keep-ivf 1 to reclaim it in the same run.
-    case class StoreSweep(frag: Option[(Long, Long, Boolean)],
-                          versionsReclaimed: Int, legacyReclaimed: Int)
-    def sweepStore(kind: String, storeSub: String, dataSub: String,
-                   legacyDirs: Seq[String],
-                   compact: String => Long,
-                   migrate: (String, String) => Long): StoreSweep =
+    // Per serving store: fragmentation probe FIRST (pre-sweep state —
+    // the signal that justifies action, reported as found), then under
+    // --compact-ivf, when fragmented, a coalescing compaction, then the
+    // version vacuum. Continuous ingest and append-accumulating builds
+    // add files per cell, so files/cell grows with history and serving
+    // latency becomes file-open overhead (46 k slivers put ~15 s on
+    // every serving batch at sf10). Threshold 8 files/cell ≈ where the
+    // measured ~0.3 ms/open overhead reached scan parity. Compaction
+    // stays GATED on the probe: an unconditional republish would
+    // full-rewrite the corpus per cron tick forever. A compaction keeps
+    // the version it coalesced for pinned readers for one cycle.
+    def sweepStore[I: IvfCodec](kind: String,
+                                storeSub: String): (Option[(Long, Long, Boolean)], Int) =
       ServingLayouts.existingDirFor(kind, corpusDir) match {
-        case None => StoreSweep(None, 0, 0)
+        case None => (None, 0)
         case Some(home) =>
           val store = s"$home/$storeSub"
-          val versions = graft.ops.Similarity.ivfVersions(spark, store)
-          if (versions.nonEmpty) {
-            val frag = fragOf(countCellFiles(
-              Paths.get(store, f"v${versions.last}%08d", dataSub)))
-            if (compactIvfStore && frag._3) compact(store)
-            StoreSweep(Some(frag),
-              graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions), 0)
-          } else if (Files.isDirectory(Paths.get(home, dataSub))) {
-            val frag = fragOf(countCellFiles(Paths.get(home, dataSub)))
-            var legacy = 0
-            if (compactIvfStore && frag._3) {
-              migrate(home, store)
-              legacyDirs.foreach { d =>
-                val p = Paths.get(home, d)
-                if (Files.exists(p)) {
-                  graft.sources.ServingLayouts.deleteTree(p)
-                  legacy += 1
-                }
-              }
-            }
-            StoreSweep(Some(frag),
-              if (graft.ops.Similarity.ivfVersions(spark, store).nonEmpty)
-                graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions)
-              else 0,
-              legacy)
-          } else if (Files.isDirectory(Paths.get(store))) {
-            // empty versioned store dir: reclaim crashed-publish stagings
-            StoreSweep(None,
-              graft.ops.Similarity.vacuumIvfVersions(spark, store, keepIvfVersions), 0)
-          } else StoreSweep(None, 0, 0)
+          val frag = IvfStore.cellFiles[I](spark, store).map { case (files, cells) =>
+            (files, cells, cells > 0 && files > cells * 8)
+          }
+          if (compactIvfStore && frag.exists(_._3)) IvfStore.compact[I](spark, store)
+          (frag, IvfStore.vacuum(spark, store, keepIvfVersions))
       }
 
-    val ivfSweep = sweepStore("ivf", "ivf", "assigned", Nil,
-      s => graft.ops.Similarity.compactIvf(spark, s),
-      (_, _) => 0L) // the float store predates flat layouts — no migration source
-    val sq8Sweep = sweepStore("sq8", "ivf", "assigned",
-      Seq("assigned", "centroids", "_index_version"),
-      s => graft.ops.Similarity.compactIvf(spark, s),
-      (home, store) => graft.ops.Similarity.writeIvfVersioned(
-        graft.ops.Similarity.IvfIndex(
-          spark.read.parquet(s"$home/centroids"),
-          spark.read.parquet(s"$home/assigned")), store))
-    val pqSweep = sweepStore("ivfpq", "pq", "codes",
-      Seq("codes", "codebooks", "centroids"),
-      s => graft.ops.Similarity.compactIvfPq(spark, s),
-      (home, store) => {
-        val (c, p, cd) = graft.ops.Similarity.loadIvfPq(spark, home)
-        graft.ops.Similarity.writeIvfPqVersioned(c, p.codebooks, cd, store)
-      })
-    val frag = ivfSweep.frag
-    val ivfReclaimed =
-      ivfSweep.versionsReclaimed + sq8Sweep.versionsReclaimed + pqSweep.versionsReclaimed
+    val ivfSweep = sweepStore[IvfIndex]("ivf", "ivf")
+    val sq8Sweep = sweepStore[IvfIndex]("sq8", "ivf")
+    val pqSweep = sweepStore[IvfPqIndex]("ivfpq", "pq")
+    val ivfReclaimed = ivfSweep._2 + sq8Sweep._2 + pqSweep._2
     val layoutsReclaimed = ServingLayouts.vacuum(layoutAgeMs)
     val snapReclaimed = snapshotPaths.map(p =>
       SnapshotTable.vacuum(spark, p, snapshotKeep)).sum
@@ -229,8 +150,7 @@ object Maintain {
     // The report carries the PRE-sweep fragmentation (the condition
     // that was found and, under --compact-ivf, acted on in this run).
     Report(ivfReclaimed, layoutsReclaimed, snapReclaimed, cacheReclaimed, drift,
-      scratchReclaimed, frag, sq8Sweep.frag, pqSweep.frag,
-      sq8Sweep.legacyReclaimed + pqSweep.legacyReclaimed)
+      scratchReclaimed, ivfSweep._1, sq8Sweep._1, pqSweep._1)
   }
 
   def main(args: Array[String]): Unit = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
 /** Streaming throughput/latency bench (r10 verdict item 6: the E-family
@@ -57,7 +57,7 @@ object StreamBench {
     * partitions ≈ |batch|×nProbe the scan is bounded and the tail owner
     * is elsewhere (planning overhead, file count, rerank).
     */
-  private final class ScanTap(pathFragment: String)
+  private final class ScanTap(scanned: String => Boolean)
       extends org.apache.spark.sql.util.QueryExecutionListener {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -73,7 +73,7 @@ object StreamBench {
       try {
         val scans = walk(qe.executedPlan).collect {
           case s: FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains(pathFragment)) => s
+            if s.relation.location.rootPaths.exists(p => scanned(p.toString)) => s
         }
         if (scans.nonEmpty) {
           def m(s: FileSourceScanExec, k: String) = s.metrics.get(k).map(_.value).getOrElse(0L)
@@ -139,7 +139,7 @@ object StreamBench {
     // watchdog-killed bench runs left ~35 GB of unreclaimed work dirs,
     // which then starved the NEXT run's disk watchdog). acquireLocal,
     // not acquire: the bench manipulates this root with java.nio APIs
-    // (hardlink cloning below), so a scheme'd GRAFT_SCRATCH must
+    // (source mtime stamping below), so a scheme'd GRAFT_SCRATCH must
     // normalize to a local path or fall back to a local temp dir.
     val work = graft.sources.ScratchDirs.acquireLocal(spark, "graft-stream-bench")
     val touchWork = () => graft.sources.ScratchDirs.touch(spark, work)
@@ -227,59 +227,36 @@ object StreamBench {
     // can never be reused — it resolves to a different home and triggers
     // a fresh build (the r14 advisor's signature-validation concern,
     // answered by construction). The bench MUTATES its index (workload 2
-    // appends), so it clones the latest version into the work dir via
-    // hardlinks instead of appending into the shared store other
-    // processes serve from: parquet files are immutable, links cost
-    // nothing, and the store is never touched.
+    // appends), so it clones the latest version into a store of its own
+    // in the work dir (one publish: the same rows, one file per cell,
+    // with a sidecar reset from them — full meta, so the ingest's
+    // O(batch) hwm guard, the query drain's stamp poll and the
+    // auto-compaction file count all start from the clone's own data)
+    // instead of appending into the shared store other processes serve
+    // from.
     if (workloads("embedding") || workloads("query")) {
+      import graft.ops.IvfStore
+      import graft.ops.Similarity.IvfIndex
       val embTable = Tables.embeddings(spark, sfDir)
       val emb = graft.ops.Similarity.prepared(embTable)
       val store = graft.sources.ServingLayouts.dirFor("ivf", sfDir) + "/ivf"
-      val reused = graft.ops.Similarity.ivfVersions(spark, store).nonEmpty
+      val reused = IvfStore.versions(spark, store).nonEmpty
       if (!reused)
-        graft.ops.Similarity.writeIvfVersioned(
+        IvfStore.publish(
           graft.ops.Similarity.buildIvf(embTable,
             graft.ops.LshGeometry.ivf(embTable.count())._1), store,
           geometryIntent = Some(false))
-      val vLatest = graft.ops.Similarity.ivfVersions(spark, store).last
-      val verDir = f"$store/v$vLatest%08d"
       val idxPath = s"$work/ivf_index"
-      def linkTree(srcDir: String, dstDir: String): Long = {
-        val src = Paths.get(srcDir)
-        var parquetFiles = 0L
-        val walk = Files.walk(src)
-        try {
-          walk.forEach { p =>
-            val dst = Paths.get(dstDir).resolve(src.relativize(p).toString)
-            if (Files.isDirectory(p)) Files.createDirectories(dst)
-            else {
-              if (p.getFileName.toString.endsWith(".parquet")) parquetFiles += 1
-              try Files.createLink(dst, p)
-              catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-                Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING) }
-            }
-          }
-        } finally walk.close()
-        parquetFiles
-      }
-      val clonedFiles = linkTree(s"$verDir/assigned", s"$idxPath/assigned")
-      linkTree(s"$verDir/centroids", s"$idxPath/centroids")
+      IvfStore.publish(IvfStore.load[IvfIndex](spark, store), idxPath)
+      // scans of the clone's stored rows (any version), not its centroids
+      def indexRows(root: String): Boolean = root.contains(idxPath) && root.endsWith("/assigned")
       // SERVED geometry — read back from the stored layout, never re-derived
-      val nCells = spark.read.parquet(s"$idxPath/centroids").count().toInt
+      val nCells = IvfStore.load[IvfIndex](spark, idxPath).nCells
       val nProbe = graft.ops.LshGeometry.ivfProbe(nCells)
       parts += s""""n_cells":$nCells"""
       parts += s""""n_probe":$nProbe"""
       parts += s""""index_reused":$reused"""
       val maxVec = emb.agg(max("vec_id")).head.getLong(0)
-      // stamp the clone with FULL meta, not just a version: the query
-      // drain's stamp-poll contract needs the version; the ingest's
-      // O(batch) redelivery guard needs the high-water mark (the clone
-      // holds exactly the corpus, so its stored max IS maxVec); the
-      // auto-compaction trigger needs the live file count (counted
-      // during the hardlink walk — no extra listing)
-      graft.ops.Similarity.writeIvfMeta(spark, idxPath,
-        graft.ops.Similarity.IvfMeta(version = 1L, hwm = Some(maxVec),
-          pending = None, gen = 0, files = clonedFiles))
 
       // ---- workload 2: embedding ingest (append into stored IVF cells) ----
       if (workloads("embedding")) {
@@ -291,7 +268,7 @@ object StreamBench {
         // stored ids (the r15 full anti-join read the entire stored
         // vec_id column — 3.0 M rows / 7.6 k files per batch at sf100);
         // these metrics are the proof the guard now costs ∝ batch
-        val ingestScanTap = new ScanTap("ivf_index/assigned")
+        val ingestScanTap = new ScanTap(indexRows)
         val ingestStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
         spark.listenerManager.register(ingestScanTap)
         val embWall =
@@ -299,7 +276,7 @@ object StreamBench {
             // autoCompact armed at the measured 8-files/cell knee: the
             // bench drives enough batches to ratchet past it, so the
             // drain exercises (and times, via the stage sink) the
-            // generation-flip compaction a long-running ingest needs
+            // version-publishing compaction a long-running ingest needs
             graft.streaming.EmbeddingStream.ingestOnce(spark, embSrc, idxPath,
               s"$work/emb_ckpt", maxFilesPerTrigger = 1,
               autoCompactFilesPerCell = 8,
@@ -311,9 +288,8 @@ object StreamBench {
         parts += s""""embedding_ingest_stage_ms":${stageJsonOf(ingestStages)}"""
         // post-ingest layout state: the auto-compact contract is that
         // file count stays bounded WITHOUT a manual maintenance step
-        val postMeta = graft.ops.Similarity.readIvfMeta(spark, idxPath)
-        parts += s""""index_files_after_ingest":${postMeta.files}"""
-        parts += s""""index_generation":${postMeta.gen}"""
+        parts += s""""index_files_after_ingest":${IvfStore.readMeta(spark, idxPath).files}"""
+        parts += s""""index_version":${IvfStore.versions(spark, idxPath).last}"""
       }
 
       // ---- workload 3: ANN query serving over the (grown) index ----
@@ -343,7 +319,7 @@ object StreamBench {
         def drain(tag: String): (Long, Int, Long, Long, Double, Int, String, String) = {
           val qTap = new ProgressTap(touchWork)
           val qStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-          val scanTap = new ScanTap("ivf_index/assigned")
+          val scanTap = new ScanTap(indexRows)
           spark.listenerManager.register(scanTap)
           var qLoads = 0
           val qWall =

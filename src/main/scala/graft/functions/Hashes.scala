@@ -22,17 +22,6 @@ object HashKernels {
     z ^ (z >>> 31)
   }
 
-  /** 64-bit hash of raw bytes (FNV-1a folded through splitmix64). */
-  def hashBytes(b: Array[Byte], seed: Long): Long = {
-    var h = 0xcbf29ce484222325L ^ seed
-    var i = 0
-    while (i < b.length) {
-      h = (h ^ (b(i) & 0xffL)) * 0x100000001b3L
-      i += 1
-    }
-    mix64(h)
-  }
-
   private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

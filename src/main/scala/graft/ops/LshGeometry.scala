@@ -187,7 +187,7 @@ object LshGeometry {
     * weak cos-margins of threshold-adjacent neighbors and ADC ranking
     * caps recall ~0.57 even at rerank 5000; m=16 (8 dims/sub, 16 B/vec
     * — 16x not 32x compression) restores the ADC ordering. Stored
-    * layouts carry their own m (loadIvfPq reads it back from the
+    * stores carry their own m (the PQ codec reads it back from the
     * codebooks), so this only shapes NEW builds.
     */
   def pqSubs(dim: Int, n: Long, smallN: Long = 4000): Int =

@@ -610,7 +610,7 @@ object Similarity {
     * and the lowest-cell tie-break are bit-identical to the old
     * `norm2(zip_with(v, c, _-_))` + window(d2, cell) form.
     */
-  private def assignCells(centroids: DataFrame, base: DataFrame,
+  private[ops] def assignCells(centroids: DataFrame, base: DataFrame,
                           spreadKernel: Boolean = false): DataFrame = {
     val rows = centroids.select(col("cell"), col("centroid")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
@@ -655,7 +655,7 @@ object Similarity {
     * to the EXISTING coarse quantizer (centroids are fixed model
     * metadata — no refit, no touch of the stored corpus) and appended.
     * At 100 TB this is an append of new files into the affected `cell=`
-    * partitions of the [[writeIvfPartitioned]] layout; periodic refit
+    * partitions of the persisted layout ([[IvfStore.append]]); periodic refit
     * is an offline rebuild, exactly like re-training any index. Cost
     * scales with the batch, never the corpus.
     */
@@ -664,450 +664,19 @@ object Similarity {
       index.assigned.unionByName(
         assignCells(index.centroids, prepared(newEmbeddings))))
 
-  /** Persist a built IVF index cell-partitioned — the billion-vector
-    * layout: probing nProbe of nCells reads ONLY those cells' files
-    * (partition pruning), so query I/O is nProbe/nCells of the corpus.
-    * Returns a loader whose `assigned` is the partition-pruned reader;
-    * compose it with [[queryIvf]] and only probed cells are scanned.
+  /** Float-codec shorthand: publish `index` as the next version of the
+    * [[IvfStore]] at `path` and return its loader, whose `assigned` is
+    * the cell-partition-pruned reader — compose it with [[queryIvf]] and
+    * only probed cells are scanned.
     */
   def writeIvfPartitioned(index: IvfIndex, path: String): IvfIndex = {
-    val spark = index.assigned.sparkSession
-    // ONE file per cell, not one per (task × cell): partitionBy from an
-    // unshuffled frame makes every task write a sliver into every cell
-    // dir — the r12 sf100 build produced 46 504 files for 2 M rows
-    // (43 rows/file), and the r15 serving bench measured the cost: a
-    // query batch's latency was ~95% file-open overhead (46 k opens
-    // ≈ 15 s) over ~650 MB of actual data. The cell shuffle moves the
-    // corpus once at build time; at real scale size multiple files per
-    // cell to a byte target instead (Sources.compactPartitions logic).
-    index.assigned.repartition(col("cell")).write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/assigned")
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    // a fresh write resets the layout to generation 0 — retire any
-    // generation dirs a prior lifecycle left (overwrite semantics)
-    val old = readIvfMeta(spark, path)
-    if (old.gen > 0) {
-      val fs = metaPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (1 to old.gen).foreach { g =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, assignedDirName(g)), true)
-      }
-    }
-    // hwm + file count from a read-back of the two columns just written
-    // (never a re-execution of the input frame); one file per cell by
-    // construction of the cell shuffle above
-    val st = spark.read.parquet(s"$path/assigned")
-      .agg(max(col("vec_id")), countDistinct(col("cell"))).head()
-    writeIvfMeta(spark, path, IvfMeta(
-      version = math.max(0L, old.version) + 1,
-      hwm = if (st.isNullAt(0)) None else Some(st.getLong(0)),
-      pending = None, gen = 0, files = st.getLong(1)))
-    IvfIndex(
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/assigned"))
+    IvfStore.publish(index, path)
+    loadIvfFlat(index.assigned.sparkSession, path)
   }
 
-  /** Metadata sidecar of a flat cell-partitioned layout — one tiny
-    * `_index_version` file carrying everything the continuous-ingest
-    * contract needs to stay O(batch):
-    *
-    *   - '''version''' (line 1): the change stamp a serving stream
-    *     polls instead of re-listing the (at scale, million-file)
-    *     assigned tree ([[graft.streaming.EmbeddingStream.queryOnce]]
-    *     reloads only on a change);
-    *   - '''hwm''': the high-water mark — the largest vec_id the
-    *     layout has ever absorbed. Under the monotone-producer
-    *     contract (upstream assigns strictly increasing ids — the
-    *     crawl→embed pipeline shape) the redelivery guard is a plain
-    *     `vec_id > hwm` filter: zero stored-id scan, where the r15
-    *     full anti-join read 3.0 M id-rows / 7.6 k files PER 100 k-row
-    *     batch at sf100;
-    *   - '''pending''': staked to the incoming batch's max id BEFORE
-    *     its append job runs and promoted into hwm after — a crash
-    *     between the two leaves `pending > hwm`, and the next append
-    *     resolves exactly that window with a narrow anti-join whose
-    *     stored-side scan parquet min/max stats bound to the files the
-    *     crashed batch could have written (every older file's ids are
-    *     ≤ hwm and is skipped whole);
-    *   - '''gen''': the live assigned-directory generation —
-    *     [[compactIvfFlat]] publishes the coalesced rewrite as gen+1
-    *     and retires gen−1, so a reader pinned to the previous
-    *     generation stays valid across one compaction cycle;
-    *   - '''files''': running count of data files in the live
-    *     generation (write: one per cell; append: one per affected
-    *     cell) — the fragmentation signal the auto-compaction trigger
-    *     reads without listing anything. -1 = unknown (legacy layout).
-    *
-    * A missing/torn file reads as `IvfMeta(-1, None, None, 0, -1)`:
-    * version -1 never matches a poller's held stamp (reload every
-    * batch), no hwm falls back to the exact full anti-join guard —
-    * conservative on every axis, never a wrong answer.
-    */
-  private[graft] case class IvfMeta(version: Long, hwm: Option[Long],
-                                    pending: Option[Long], gen: Int, files: Long)
-
-  private def metaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_index_version")
-
-  private[graft] def readIvfMeta(spark: SparkSession, path: String): IvfMeta = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      if (!fs.exists(p)) IvfMeta(-1L, None, None, 0, -1L)
-      else {
-        val in = fs.open(p)
-        val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val lines = text.split("\n").map(_.trim).filter(_.nonEmpty)
-        val version = lines.headOption.map(_.toLong).getOrElse(-1L)
-        def kv(k: String): Option[Long] = lines.collectFirst {
-          case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=").toLong
-        }
-        IvfMeta(version, kv("hwm"), kv("pending"),
-          kv("gen").map(_.toInt).getOrElse(0), kv("files").getOrElse(-1L))
-      }
-    } catch {
-      case _: java.io.IOException | _: NumberFormatException =>
-        IvfMeta(-1L, None, None, 0, -1L)
-    }
-  }
-
-  /** Single-writer append-owner discipline, like the append itself
-    * (parquet append is already not safe under concurrent writers).
-    */
-  private[graft] def writeIvfMeta(spark: SparkSession, path: String,
-                                  meta: IvfMeta): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = new StringBuilder
-    body.append(meta.version).append('\n')
-    meta.hwm.foreach(h => body.append(s"hwm=$h\n"))
-    meta.pending.foreach(h => body.append(s"pending=$h\n"))
-    if (meta.gen != 0) body.append(s"gen=${meta.gen}\n")
-    if (meta.files >= 0) body.append(s"files=${meta.files}\n")
-    val out = fs.create(p, true)
-    try out.write(body.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Change stamp of a flat cell-partitioned layout (the first line of
-    * the [[IvfMeta]] sidecar). Returns -1 for a stampless layout
-    * (pre-stamp builds): a poller must then reload every batch, which
-    * is exactly the legacy behavior.
-    */
-  def ivfStampOf(spark: SparkSession, path: String): Long =
-    readIvfMeta(spark, path).version
-
-  /** Name of generation `gen`'s assigned directory: generation 0 is the
-    * plain `assigned` every pre-generation layout already has.
-    */
-  private def assignedDirName(gen: Int): String =
-    if (gen == 0) "assigned" else f"assigned-g$gen%05d"
-
-  /** The LIVE assigned directory of a flat layout — readers resolve it
-    * through the meta sidecar so a compaction's generation flip is one
-    * stamp read away, never a re-list.
-    */
-  private[graft] def ivfAssignedDir(spark: SparkSession, path: String): String =
-    s"$path/${assignedDirName(readIvfMeta(spark, path).gen)}"
-
-  /** Load a flat cell-partitioned layout's current generation. */
+  /** Float-codec shorthand for [[IvfStore.load]] of the latest version. */
   def loadIvfFlat(spark: SparkSession, path: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(ivfAssignedDir(spark, path)))
-
-  /** Append a new batch to a PERSISTED cell-partitioned index
-    * ([[writeIvfPartitioned]] layout): assign against the stored
-    * centroids, write new files into only the affected `cell=`
-    * directories (mode append — existing files never rewritten), and
-    * return the refreshed loader. The storage-level face of
-    * [[appendToIvf]]: continuous ingest touches O(batch) files while
-    * the corpus-sized index stays in place.
-    *
-    * Redelivery (idempotence) guard — parquet append is not atomic and
-    * ingest batches get replayed; re-appending an already-indexed
-    * vec_id would make it a duplicate candidate in every probe of its
-    * cell. Two forms:
-    *
-    *   - `monotoneIds = true` (the streaming-ingest contract: the
-    *     upstream embed stage assigns strictly increasing vec_ids):
-    *     rows at or under the layout's high-water mark are dropped by
-    *     a plain filter — NO stored-id scan, cost ∝ batch at any
-    *     corpus size. Crash safety is the [[IvfMeta]] pending
-    *     two-phase: the batch's max id is staked before the append job
-    *     and promoted after; an append that crashed between the two
-    *     leaves `pending > hwm`, and the next batch resolves exactly
-    *     that id window with an anti-join whose stored-side scan
-    *     parquet min/max stats bound to the crashed batch's possible
-    *     files (ids in every older file are ≤ hwm — skipped whole).
-    *     DO NOT pass true for an id space that interleaves with
-    *     already-stored ids: new low ids would read as redelivered and
-    *     be dropped.
-    *   - `monotoneIds = false` (default — the general API): the exact
-    *     anti-join against the stored id column, correct for any id
-    *     order at a per-batch cost ∝ corpus. A guarded append also
-    *     initializes the hwm (one extra max() over the same stored
-    *     scan when the layout lacks one), so a layout can be handed to
-    *     the monotone fast path afterwards.
-    */
-  /** O(batch) monotone-contract assertion (r16 verdict item 5): under
-    * `monotoneIds = true` a batch must be either all-new (min id > hwm)
-    * or a redelivery (max id ≤ hwm). A STRADDLING batch — min ≤ hwm <
-    * max — means the producer broke the contract (interleaved id
-    * landings), and the plain hwm filter would silently drop the low
-    * ids as "redelivered": data loss with no symptom (the failure mode
-    * the r16 stream bench itself hit before its source was restaged).
-    * Detection is one min/max aggregate over the batch (cost ∝ batch,
-    * preserving the guard's O(batch) contract); on violation the caller
-    * falls back to the exact stored-id anti-join — correct under any id
-    * order — and this helper says so loudly on stderr.
-    */
-  private def straddlesHwm(batch: DataFrame, h: Long, path: String): Boolean = {
-    val mm = batch.agg(min(col("vec_id")), max(col("vec_id"))).head()
-    val straddles = !mm.isNullAt(0) && mm.getLong(0) <= h && mm.getLong(1) > h
-    if (straddles) System.err.println(
-      s"[graft] monotone-id contract VIOLATED at $path: batch ids " +
-        s"[${mm.getLong(0)}, ${mm.getLong(1)}] straddle the high-water " +
-        s"mark $h — falling back to the exact stored-id anti-join for " +
-        "this batch (pass monotoneIds=false if the producer interleaves ids)")
-    straddles
-  }
-
-  def appendToIvfPartitioned(path: String, newEmbeddings: DataFrame,
-                             monotoneIds: Boolean = false): IvfIndex = {
-    val spark = newEmbeddings.sparkSession
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val meta = readIvfMeta(spark, path)
-    val aDir = s"$path/${assignedDirName(meta.gen)}"
-    val preparedB = prepared(newEmbeddings)
-    def storedIds = spark.read.parquet(aDir).select(col("vec_id"))
-    val guarded = (if (monotoneIds) meta.hwm else None) match {
-      case Some(h) if straddlesHwm(preparedB, h, path) =>
-        // monotone contract violated (interleaved producer): the plain
-        // hwm filter would silently DROP the batch's low-but-new ids as
-        // "redelivered" — fall back to the exact anti-join, correct
-        // under any id order (see [[straddlesHwm]])
-        preparedB.join(storedIds, Seq("vec_id"), "left_anti")
-      case Some(h) =>
-        meta.pending match {
-          case Some(p) if p > h =>
-            // crash window: a prior append may have committed data for
-            // ids in (h, p] without promoting hwm — verify exactly that
-            // window; rows > p are provably new, rows ≤ h provably old
-            preparedB.filter(col("vec_id") > h)
-              .join(storedIds.filter(col("vec_id") > h),
-                Seq("vec_id"), "left_anti")
-          case _ => preparedB.filter(col("vec_id") > h)
-        }
-      case None =>
-        preparedB.join(storedIds, Seq("vec_id"), "left_anti")
-    }
-    val assignedNew = assignCells(centroids, guarded, spreadKernel = true).persist()
-    try {
-      val st = assignedNew
-        .agg(max(col("vec_id")), countDistinct(col("cell")), count(lit(1))).head()
-      if (st.getLong(2) == 0L) {
-        // full redelivery (or empty batch): nothing lands, no version
-        // bump (no spurious serving reload). A pending mark this guard
-        // just verified resolves to its promoted hwm.
-        meta.pending match {
-          case Some(p) if meta.hwm.exists(p > _) =>
-            writeIvfMeta(spark, path, meta.copy(hwm = Some(p), pending = None))
-          case _ => ()
-        }
-      } else {
-        val batchMax = st.getLong(0)
-        val cellsTouched = st.getLong(1)
-        // legacy layouts carry no hwm: initialize it from the stored max
-        // (the one-time scan that retires the per-batch scan for good)
-        val storedMax = meta.hwm.orElse(meta.pending).getOrElse {
-          val r = spark.read.parquet(aDir).agg(max(col("vec_id"))).head()
-          if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-        }
-        val newHwm = math.max(batchMax, storedMax)
-        writeIvfMeta(spark, path, meta.copy(pending = Some(newHwm)))
-        assignedNew
-          // one file per AFFECTED cell per batch (shuffle ∝ batch):
-          // without this every task sprays a sliver into every cell it
-          // touches, and a 20-batch ingest fragments the layout into
-          // tens of thousands of files whose open cost dominates serving
-          // latency (measured, r15 — see writeIvfPartitioned)
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(aDir)
-        writeIvfMeta(spark, path, IvfMeta(
-          version = math.max(0L, meta.version) + 1,
-          hwm = Some(newHwm), pending = None, gen = meta.gen,
-          files = if (meta.files >= 0) meta.files + cellsTouched else -1L))
-      }
-    } finally assignedNew.unpersist()
-    IvfIndex(centroids, spark.read.parquet(aDir))
-  }
-
-  /** Coalesce a FLAT layout's live generation in place-ish: rewrite the
-    * assigned tree one-file-per-cell as generation n+1, flip the meta
-    * sidecar (version bump → serving pollers reload), and retire
-    * generation n−1. Generation n stays on disk, so a reader pinned to
-    * the pre-compaction directory survives ONE compaction cycle — it
-    * re-resolves the live generation at its next stamp poll. The
-    * continuous-ingest maintenance op: appends add ~one file per
-    * affected cell per batch and the file count ratchets (measured r15:
-    * 1 056 → 10 794 files across a 20-batch sf100 ingest) until serving
-    * latency is file-open overhead; the [[IvfMeta.files]] counter gives
-    * the trigger without a listing. Also resolves hwm from the data
-    * itself (clearing any crashed append's pending mark). Single
-    * maintainer: run from the append owner between batches, never
-    * concurrently with another compaction.
-    */
-  def compactIvfFlat(spark: SparkSession, path: String): Int = {
-    val meta = readIvfMeta(spark, path)
-    val newGen = meta.gen + 1
-    val newDir = s"$path/${assignedDirName(newGen)}"
-    spark.read.parquet(s"$path/${assignedDirName(meta.gen)}")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(newDir)
-    val st = spark.read.parquet(newDir)
-      .agg(max(col("vec_id")), countDistinct(col("cell"))).head()
-    writeIvfMeta(spark, path, IvfMeta(
-      version = math.max(0L, meta.version) + 1,
-      hwm = if (st.isNullAt(0)) None else Some(st.getLong(0)),
-      pending = None, gen = newGen, files = st.getLong(1)))
-    if (newGen - 2 >= 0) {
-      val fs = metaPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path, assignedDirName(newGen - 2)), true)
-    }
-    newGen
-  }
-
-  /** Versioned home for a persisted IVF layout — the maintenance story
-    * [[appendToIvfPartitioned]] defers to ("periodic refit is an
-    * offline rebuild"): each version is a complete
-    * `v<00000001>/{centroids,assigned}` layout staged under a temp name
-    * and PUBLISHED with one atomic directory rename (the
-    * [[graft.sources.SnapshotTable]] publish primitive, conflicts
-    * detected the same way). A serving reader loads the latest version
-    * at plan time and keeps reading THAT directory for the life of its
-    * plan, so a concurrent rebuild is invisible to it — old-or-new,
-    * never a mix of one version's centroids with another's cells.
-    */
-  def ivfVersions(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d{8}")).map(_.drop(1).toLong).sorted
-  }
-
-  /** Publish `index` as the next version of the layout at `path`.
-    * `geometryIntent` (Some(explicit?)) stages a `_geometry_intent`
-    * marker INSIDE the version directory, so intent publishes
-    * atomically with the version it describes (r13 advisor: a
-    * store-level marker written after the rename could be lost on a
-    * crash between publish and marker, or torn by concurrent rebuilds).
-    * None writes no marker — readers fall back to the newest version
-    * that carries one (or the legacy store-level file).
-    */
-  def writeIvfVersioned(index: IvfIndex, path: String,
-                        geometryIntent: Option[Boolean] = None): Long = {
-    val spark = index.assigned.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = ivfVersions(spark, path).lastOption.getOrElse(0L) + 1
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      ".tmp-" + java.util.UUID.randomUUID().toString.take(12))
-    // one file per cell — see writeIvfPartitioned (the r12 sf100 build
-    // published 46 k slivers and serving paid ~15 s/batch opening them)
-    index.assigned.repartition(col("cell")).write.partitionBy("cell")
-      .parquet(s"$tmp/assigned")
-    index.centroids.write.parquet(s"$tmp/centroids")
-    geometryIntent.foreach { explicit =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_geometry_intent"), true)
-      try out.write((if (explicit) "explicit" else "derived").getBytes("UTF-8"))
-      finally out.close()
-    }
-    graft.sources.SnapshotTable.atomicPublishDir(fs, tmp,
-      new org.apache.hadoop.fs.Path(path, f"v$v%08d"))
-    v
-  }
-
-  /** Retention-K GC for a versioned IVF layout — the maintenance loop
-    * [[writeIvfVersioned]] leaves open (every rebuild doubles storage
-    * until superseded versions are reclaimed): delete all but the
-    * newest `keepVersions` version directories plus any `.tmp-*`
-    * staging a crashed rebuild left behind. The latest version is
-    * never deleted (`keepVersions >= 1` enforced); a reader pinned to
-    * a reclaimed older version fails on its next scan — the same
-    * retention trade as [[graft.sources.SnapshotTable.vacuum]], run it
-    * on the owner's cadence after pinned readers drain. Must not run
-    * concurrently with an in-flight rebuild (its staging would read as
-    * torn). Returns the number of directories reclaimed.
-    */
-  def vacuumIvfVersions(spark: SparkSession, path: String,
-                        keepVersions: Int = 1): Int = {
-    require(keepVersions >= 1, "must keep at least the latest version")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val drop = ivfVersions(spark, path).dropRight(keepVersions)
-    var deleted = 0
-    drop.foreach { v =>
-      if (fs.delete(new org.apache.hadoop.fs.Path(p, f"v$v%08d"), true)) deleted += 1
-    }
-    fs.listStatus(p).foreach { s =>
-      if (s.getPath.getName.startsWith(".tmp-")) {
-        fs.delete(s.getPath, true); deleted += 1
-      }
-    }
-    deleted
-  }
-
-  /** Load one version (latest by default) of a versioned IVF layout;
-    * the returned readers are pinned to that version's directory.
-    */
-  def loadIvfVersioned(spark: SparkSession, path: String,
-                       version: Long = -1L): IvfIndex = {
-    val vs = ivfVersions(spark, path)
-    require(vs.nonEmpty, s"no versioned IVF layout at $path")
-    val v = if (version >= 0) version else vs.last
-    val d = new org.apache.hadoop.fs.Path(path, f"v$v%08d").toString
-    IvfIndex(spark.read.parquet(s"$d/centroids"),
-      spark.read.parquet(s"$d/assigned"))
-  }
-
-  /** Offline coarse-quantizer RETRAIN of a versioned IVF layout — the
-    * maintenance op [[AnnServing.ivfCellStats]]'s drift dashboard calls
-    * for: refit KMeans on the STORED vectors (the latest version's
-    * assigned frame carries them — no re-read of the source corpus),
-    * reassign, and publish the result as version n+1 via the atomic
-    * rename. Serving readers pinned at n keep their directory; new
-    * loads get n+1; a crashed rebuild leaves only an inert `.tmp-*`
-    * staging (reclaim by deleting it). Old versions are kept for
-    * pinned readers until explicitly deleted — same retention trade as
-    * [[graft.sources.SnapshotTable.vacuum]].
-    */
-  def rebuildIvf(spark: SparkSession, path: String, nCells: Int = 16): Long = {
-    val current = loadIvfVersioned(spark, path)
-    val vectors = current.assigned.select(col("vec_id"), col("v").as("embedding"))
-    writeIvfVersioned(buildIvf(vectors, nCells), path)
-  }
-
-  /** COMPACT a versioned IVF layout without refitting: republish the
-    * latest version's rows as v+1 through the (cell-coalescing) write
-    * path — same centroids, same assignments, ~one file per cell. The
-    * maintenance pass continuous ingest makes necessary: every append
-    * adds files to the affected cells, and once a layout accumulates
-    * tens of thousands of slivers, serving latency is file-open
-    * overhead, not data (measured at sf100: 46 504 files for 2 M rows,
-    * ~15 s/batch before compaction). Cheap relative to [[rebuildIvf]]
-    * — one corpus read + one cell-shuffle write, no KMeans — and
-    * atomic like any version publish: pinned readers keep v, new
-    * loads get v+1, vacuum reclaims the fragmented version on the
-    * owner's cadence. The RESOLVED geometry intent is re-stamped into
-    * the new version explicitly: relying on the marker-inheritance
-    * fallback would lose an explicit intent once vacuum retires the
-    * last marker-carrying version (r15 review), flipping the drift
-    * dashboard to a permanent rebuild_recommended nag on a
-    * deliberately-chosen geometry.
-    */
-  def compactIvf(spark: SparkSession, path: String): Long =
-    writeIvfVersioned(loadIvfVersioned(spark, path), path,
-      geometryIntent = Some(AnnServing.geometryIntentExplicit(spark, path)))
+    IvfStore.load[IvfIndex](spark, path)
 
   /** Query phase against a built index: each query probes its nProbe
     * nearest cells (L2, the training metric) and exactly reranks only
@@ -1215,6 +784,15 @@ object Similarity {
     */
   case class PqModel(codebooks: DataFrame, mSubs: Int, subDim: Int)
 
+  /** An IVF-PQ index: coarse centroids, the product quantizer, and the
+    * cell-tagged code table (vec_id, codes, cell). Like [[IvfIndex]],
+    * the served geometry is read back from the centroid frame once per
+    * instance.
+    */
+  case class IvfPqIndex(centroids: DataFrame, pq: PqModel, codes: DataFrame) {
+    lazy val nCells: Int = centroids.count().toInt
+  }
+
   /** Explode vectors into (id, sub, subv) sub-vector rows — the shared
     * slicing for PQ train/encode/query. Narrow (one explode, no
     * shuffle); `idCol`/`vecCol` name the input columns.
@@ -1320,18 +898,15 @@ object Similarity {
   def knnIvfPq(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
                nCells: Int = 16, nProbe: Int = 4, mSubs: Int = 8,
                kCentroids: Int = 32, rerank: Int = 50): DataFrame = {
-    val index = buildIvf(embeddings, nCells)
-    val pq = trainPq(embeddings, mSubs, kCentroids)
-    val codes = encodePq(pq, index.assigned)
-      .join(index.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    val index = ivfPq(buildIvf(embeddings, nCells), trainPq(embeddings, mSubs, kCentroids))
     val queries = prepared(embeddings).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
-    queryIvfPq(index.centroids, pq, codes, queries, prepared(embeddings),
+    queryIvfPq(index.centroids, index.pq, index.codes, queries, prepared(embeddings),
       k, nProbe, rerank, excludeSelf = true)
   }
 
   /** Query phase of IVF-PQ, shared by the in-memory composition
-    * ([[knnIvfPq]]) and the persisted layout ([[loadIvfPq]]): coarse
+    * ([[knnIvfPq]]) and the persisted [[IvfStore]]: coarse
     * probe on `centroids`, ADC scoring of `codes` (vec_id, cell,
     * codes), exact rerank of the shortlist against `rerankCorpus` (a
     * [[prepared]] frame — at scale, a point-lookup of the rerank-sized
@@ -1396,169 +971,15 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** Persist the IVF-PQ serving artifact: coarse centroids + PQ
-    * codebooks (model metadata, tiny) and the code table partitioned by
-    * cell — the layout where a probe reads m BYTES per candidate from
-    * only its probed cells' files. This is the configuration in which
-    * the float corpus is cold storage touched only by the rerank
-    * point-lookup; everything the hot path scans is codes.
+  /** The PQ codec form of a built IVF index: every vector encoded
+    * against the codebooks and tagged with its coarse cell — what an
+    * [[IvfStore]] of the PQ codec holds, where a probe reads m BYTES per
+    * candidate from only its probed cells' files and the float corpus is
+    * cold storage touched only by the rerank point-lookup.
     */
-  /** The (vec_id, codes, cell) frame a PQ layout stores — encode every
-    * vector against the codebooks and tag it with its coarse cell.
-    */
-  def pqCodesOf(ivf: IvfIndex, pq: PqModel): DataFrame =
-    encodePq(pq, ivf.assigned)
-      .join(ivf.assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-
-  def writeIvfPq(ivf: IvfIndex, pq: PqModel, path: String): Unit = {
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    pq.codebooks.write.mode("overwrite").parquet(s"$path/codebooks")
-    pqCodesOf(ivf, pq)
-      // one file per cell — same fragmentation fix as writeIvfPartitioned
-      // (unshuffled partitionBy writes one sliver per task × cell, and
-      // serving latency becomes file-open overhead)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-  }
-
-  /** Load a [[writeIvfPq]] layout: (centroids, model, codes reader) —
-    * geometry (mSubs, subDim) restored from the codebooks themselves.
-    * Compose with [[queryIvfPq]]; the codes reader partition-prunes on
-    * cell.
-    */
-  def loadIvfPq(spark: org.apache.spark.sql.SparkSession,
-                path: String): (DataFrame, PqModel, DataFrame) = {
-    val codebooks = spark.read.parquet(s"$path/codebooks")
-    val mSubs = codebooks.agg(max(col("sub"))).head().getInt(0) + 1
-    val subDim = codebooks.select(size(col("centroid"))).head().getInt(0)
-    (spark.read.parquet(s"$path/centroids"),
-      PqModel(codebooks, mSubs, subDim),
-      spark.read.parquet(s"$path/codes"))
-  }
-
-  /** Append a new embedding batch to a persisted IVF-PQ layout
-    * ([[writeIvfPq]]): assign cells against the STORED coarse
-    * centroids, encode with the STORED codebooks (both are fixed model
-    * metadata — no refit, no touch of existing code files), and append
-    * new code files into only the affected `cell=` directories. The
-    * continuous-ingest shape for the quantized index, symmetric to
-    * [[appendToIvfPartitioned]] — including the redelivery guard: under
-    * `monotoneIds` it is one filter against the layout's stamped
-    * high-water mark (zero stored-id scan, the pending two-phase mark
-    * closing the append/promote crash window with a stats-bounded
-    * narrow anti-join); without the contract it stays the exact
-    * anti-join against the stored vec_id column — a replayed batch
-    * would duplicate code rows, and duplicate candidates can displace
-    * true neighbors in the ADC rerank shortlist. The hwm is MAINTAINED
-    * on every append (one-time stored-max scan for a legacy layout),
-    * so a caller can adopt the contract later without a migration.
-    */
-  def appendToIvfPq(path: String, newEmbeddings: DataFrame,
-                    monotoneIds: Boolean = false): Unit = {
-    val spark = newEmbeddings.sparkSession
-    val (centroids, pq, codes) = loadIvfPq(spark, path)
-    val meta = readIvfMeta(spark, path)
-    val preparedB = prepared(newEmbeddings)
-    val guarded = (if (monotoneIds) meta.hwm else None) match {
-      case Some(h) if straddlesHwm(preparedB, h, path) =>
-        // contract violated — exact anti-join instead of silent row loss
-        preparedB.join(codes.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      case Some(h) =>
-        meta.pending match {
-          case Some(p) if p > h =>
-            // crash window: a prior append may have committed code rows
-            // for ids in (h, p] without promoting hwm — verify exactly
-            // that window (parquet stats prune files whose vec_id range
-            // lies wholly below h); rows ≤ h are provably old
-            preparedB.filter(col("vec_id") > h)
-              .join(codes.select(col("vec_id")).filter(col("vec_id") > h),
-                Seq("vec_id"), "left_anti")
-          case _ => preparedB.filter(col("vec_id") > h)
-        }
-      case None =>
-        preparedB.join(codes.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    }
-    val assigned = assignCells(centroids, guarded, spreadKernel = true).persist()
-    try {
-      val st = assigned.agg(max(col("vec_id")), count(lit(1))).head()
-      if (st.getLong(1) == 0L) {
-        // full redelivery (or empty batch): nothing lands; a pending
-        // mark this guard just verified resolves to its promoted hwm
-        meta.pending match {
-          case Some(p) if meta.hwm.exists(p > _) =>
-            writeIvfMeta(spark, path, meta.copy(hwm = Some(p), pending = None))
-          case _ => ()
-        }
-      } else {
-        val batchMax = st.getLong(0)
-        val storedMax = meta.hwm.orElse(meta.pending).getOrElse {
-          val r = codes.agg(max(col("vec_id"))).head()
-          if (r.isNullAt(0)) Long.MinValue else r.getLong(0)
-        }
-        val newHwm = math.max(batchMax, storedMax)
-        writeIvfMeta(spark, path, meta.copy(pending = Some(newHwm)))
-        encodePq(pq, assigned)
-          .join(assigned.select(col("vec_id"), col("cell")), Seq("vec_id"))
-          // one new file per affected cell per batch (see appendToIvfPartitioned)
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-        writeIvfMeta(spark, path, meta.copy(
-          version = math.max(0L, meta.version) + 1,
-          hwm = Some(newHwm), pending = None))
-      }
-    } finally assigned.unpersist()
-  }
-
-  /** Publish a PQ layout (centroids + codebooks + cell-partitioned
-    * codes) as the next version of the versioned store at `path` —
-    * the same `v<00000001>/…` + atomic-rename lifecycle as
-    * [[writeIvfVersioned]] (shared version listing, shared vacuum), so
-    * the SERVED compressed forms get the identical
-    * rebuild/compact/retire story as float IVF: pinned readers keep
-    * their version directory; new loads get v+1.
-    */
-  def writeIvfPqVersioned(centroids: DataFrame, codebooks: DataFrame,
-                          codes: DataFrame, path: String): Long = {
-    val spark = codes.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = ivfVersions(spark, path).lastOption.getOrElse(0L) + 1
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      ".tmp-" + java.util.UUID.randomUUID().toString.take(12))
-    centroids.write.parquet(s"$tmp/centroids")
-    codebooks.write.parquet(s"$tmp/codebooks")
-    // one file per cell — the m-bytes-per-candidate scan the PQ design
-    // argument is about only pays when it is not buried under per-file
-    // open overhead (the r12 sf100 PQ store: 22 k slivers, and the
-    // compressed form served 9.6× SLOWER than uncompressed float IVF)
-    codes.repartition(col("cell")).write.partitionBy("cell")
-      .parquet(s"$tmp/codes")
-    graft.sources.SnapshotTable.atomicPublishDir(fs, tmp,
-      new org.apache.hadoop.fs.Path(path, f"v$v%08d"))
-    v
-  }
-
-  /** Load one version (latest by default) of a versioned PQ store;
-    * the returned readers are pinned to that version's directory.
-    */
-  def loadIvfPqVersioned(spark: SparkSession, path: String,
-                         version: Long = -1L): (DataFrame, PqModel, DataFrame) = {
-    val vs = ivfVersions(spark, path)
-    require(vs.nonEmpty, s"no versioned PQ layout at $path")
-    val v = if (version >= 0) version else vs.last
-    loadIvfPq(spark, new org.apache.hadoop.fs.Path(path, f"v$v%08d").toString)
-  }
-
-  /** COMPACT a versioned PQ store without re-encoding: republish the
-    * latest version's frames as v+1 through the cell-coalescing write.
-    * Same trade as [[compactIvf]]: one store read + one cell-shuffle
-    * write, no KMeans, atomic publish, vacuum retires the fragmented
-    * version on the owner's cadence.
-    */
-  def compactIvfPq(spark: SparkSession, path: String): Long = {
-    val (centroids, pq, codes) = loadIvfPqVersioned(spark, path)
-    writeIvfPqVersioned(centroids, pq.codebooks, codes, path)
-  }
+  def ivfPq(ivf: IvfIndex, pq: PqModel): IvfPqIndex =
+    IvfPqIndex(ivf.centroids, pq, encodePq(pq, ivf.assigned)
+      .join(ivf.assigned.select(col("vec_id"), col("cell")), Seq("vec_id")))
 
   /** Random-hyperplane LSH ANN — the scale path. bands×bitsPerBand
     * pseudo-random hyperplanes (deterministic ±1 entries from xxhash64
@@ -1612,10 +1033,10 @@ object Similarity {
 
 /** Session-scoped ANN SERVING layer — the build-once/serve-many split the
   * FAISS deployment pattern means (train/encode offline, serve online):
-  * the FIRST call per sf-dir builds the index family, persists each in
-  * its cell-partitioned serving layout ([[Similarity.writeIvfPartitioned]]
-  * / [[Similarity.writeIvfPq]] — the same layouts the equivalence specs
-  * prove ≡ in-memory), and caches the loaders; every subsequent call
+  * the FIRST call per sf-dir builds the index family, publishes each as
+  * version 1 of an [[IvfStore]] (float IVF and SQ8 under the float codec,
+  * IVF-PQ under the PQ codec — the layout the equivalence specs prove
+  * ≡ in-memory), and caches the loaders; every subsequent call
   * (bench rep, query endpoint hit) runs ONLY the query phase against the
   * stored layout. What gets timed repeatedly is therefore the serving
   * latency — the thing the whole IVF/PQ design argument is about — not a
@@ -1624,7 +1045,7 @@ object Similarity {
   * index retrain.
   */
 object AnnServing {
-  import Similarity.{IvfIndex, PqModel}
+  import Similarity.{IvfIndex, IvfPqIndex}
   import graft.sources.{ServingLayouts, SessionCache}
   import scala.util.control.NonFatal
 
@@ -1637,14 +1058,7 @@ object AnnServing {
   private val ivfCache = new SessionCache[(String, IvfIndex)]()
   private val sq8Cache = new SessionCache[(String, IvfIndex)]()
 
-  /** A loaded PQ serving layout; like [[Similarity.IvfIndex]], the
-    * served geometry is read back from the stored centroid frame once
-    * per cached instance.
-    */
-  private case class PqLayout(centroids: DataFrame, pq: PqModel, codes: DataFrame) {
-    lazy val nCells: Int = centroids.count().toInt
-  }
-  private val pqCache  = new SessionCache[(String, PqLayout)]()
+  private val pqCache  = new SessionCache[(String, IvfPqIndex)]()
   private val exactCache = new SessionCache[DataFrame](df =>
     df.unpersist(blocking = false)) // drop pinned blocks when an entry is superseded
 
@@ -1666,76 +1080,25 @@ object AnnServing {
     }
   }
 
-  // ALL THREE serving families serve from a VERSIONED store so the
-  // offline rebuild/compact ops compose with live serving (publish
-  // v+1, flip the cache; pinned readers keep their version directory).
-  // sq8/pq joined float-IVF in r16: their r12 flat layouts could not
-  // be compacted atomically, and the sf100 stores fossilized at 46 k /
-  // 22 k sliver files — the compressed forms served 4-10× SLOWER than
-  // the uncompressed one they exist to beat, pure file-open overhead.
+  // Every serving family is an IvfStore, so the offline rebuild and
+  // compact ops compose with live serving: publish v+1, flip the cache,
+  // and pinned readers keep their version directory. Float IVF and SQ8
+  // use the float codec (SQ8 stores the int8-dequantized vectors), PQ
+  // the PQ codec.
   private def ivfStore(sfDir: String): String =
     ServingLayouts.dirFor("ivf", sfDir) + "/ivf"
 
-  /** Whether a pre-versioned FLAT layout (the r12 store shape) sits at
-    * `home` with data under `sub` — the migration trigger below.
+  /** Cold-start a store: publish v1 via `build` if no version exists.
+    * Tolerates losing a concurrent cold-start's publish race: if
+    * versions exist after the failure, serve those.
     */
-  private def legacyFlatExists(spark: SparkSession, home: String,
-                               sub: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(home, sub)
-    scala.util.Try(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    ).getOrElse(false)
-  }
-
-  /** Cold-start a versioned store: publish v1 if none exists — from the
-    * home's legacy flat layout when one is present (a pure
-    * cell-coalescing republish of the same rows: migration IS the
-    * compaction, no model refit), else via `build`. Tolerates losing a
-    * concurrent cold-start's publish race the same way servedIvf
-    * always has: if versions exist after the failure, serve those.
-    */
-  private def ensureVersioned(spark: SparkSession, store: String,
-                              publishLegacy: Option[() => Long],
-                              build: () => Long): Unit =
-    if (Similarity.ivfVersions(spark, store).isEmpty)
-      try publishLegacy.map(_.apply()).getOrElse(build())
+  private def ensurePublished(spark: SparkSession, store: String)(build: => Long): Unit =
+    if (IvfStore.versions(spark, store).isEmpty)
+      try build
       catch {
-        case NonFatal(e) if Similarity.ivfVersions(spark, store).isEmpty => throw e
+        case NonFatal(e) if IvfStore.versions(spark, store).isEmpty => throw e
         case NonFatal(_) => ()
       }
-
-  /** Whether the store's latest declared quantizer geometry used an
-    * EXPLICIT nCells override — read back by the drift dashboard
-    * ([[ivfCellStats]] / [[ivfGeometryDrift]]) so a store deliberately
-    * built with `rebuildServedIvf(nCells = …)` never nags
-    * `rebuild_recommended` just because the override differs from
-    * today's derivation (r12 advisor). The marker lives INSIDE each
-    * version directory (published atomically with it — r13 advisor);
-    * versions without one (generic [[rebuildIvf]] publishes) inherit
-    * from the newest older version that has one, then from the legacy
-    * store-level file, then default to derived-intent.
-    */
-  private[graft] def geometryIntentExplicit(spark: SparkSession,
-                                            store: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def readMarker(p: org.apache.hadoop.fs.Path): Option[Boolean] = {
-      val fs = p.getFileSystem(conf)
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          try Some(new String(in.readAllBytes(), "UTF-8").trim == "explicit")
-          finally in.close()
-        }
-      } catch { case _: java.io.IOException => None }
-    }
-    val perVersion = Similarity.ivfVersions(spark, store).reverseIterator
-      .map(v => readMarker(new org.apache.hadoop.fs.Path(store, f"v$v%08d/_geometry_intent")))
-      .collectFirst { case Some(b) => b }
-    perVersion.orElse(
-      readMarker(new org.apache.hadoop.fs.Path(store, "_geometry_intent")))
-      .getOrElse(false)
-  }
 
   /** BUILD-time geometry: explicit nCells wins; the ≤0 sentinel derives
     * from the corpus size ([[graft.ops.LshGeometry.ivf]] — the one
@@ -1759,27 +1122,17 @@ object AnnServing {
     servedValidated(ivfCache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("ivf", sfDir)
       val store = home + "/ivf"
-      if (Similarity.ivfVersions(spark, store).isEmpty)
-        try
-          // intent is staged inside the version dir → atomic with the
-          // publish; a marker failure now fails the publish instead of
-          // leaving a published version with swallowed intent
-          Similarity.writeIvfVersioned(
-            Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
-              cellsForBuild(spark, sfDir, nCells)), store,
-            geometryIntent = Some(nCells > 0))
-        catch {
-          // a concurrent cold-start won the version-1 publish: serve its index
-          case NonFatal(e) if Similarity.ivfVersions(spark, store).isEmpty => throw e
-          case NonFatal(_) => ()
-        }
+      // intent is staged inside the version dir → atomic with the publish
+      ensurePublished(spark, store)(IvfStore.publish(
+        Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
+          cellsForBuild(spark, sfDir, nCells)), store, geometryIntent = Some(nCells > 0)))
       ServingLayouts.markComplete(home)
-      (home, Similarity.loadIvfVersioned(spark, store))
+      (home, IvfStore.load[IvfIndex](spark, store))
     }
 
   /** Act on the [[ivfCellStats]] drift signal for the SERVED index:
-    * retrain offline ([[Similarity.rebuildIvf]] — publishes version
-    * n+1 atomically), then flip the serving cache to the new version.
+    * retrain offline (a refit published as version n+1 of the store,
+    * atomically), then flip the serving cache to the new version.
     * In-flight readers of the old version keep their directory; every
     * call after the flip serves the rebuilt quantizer. Returns the
     * published version.
@@ -1797,7 +1150,7 @@ object AnnServing {
     // non-reproducible) quantizer, which the cross-process hammer
     // caught as a fingerprint flip between two correct drivers.
     val store = ivfStore(sfDir)
-    val v = Similarity.writeIvfVersioned(
+    val v = IvfStore.publish(
       Similarity.buildIvf(graft.Tables.embeddings(spark, sfDir),
         cellsForBuild(spark, sfDir, nCells)), store,
       geometryIntent = Some(nCells > 0))
@@ -1830,30 +1183,20 @@ object AnnServing {
 
   /** IVF-SQ8 served from the persisted index over the int8-dequantized
     * corpus; queries keep full float precision (see [[Similarity.knnIvfSq8]]).
-    * Serves the latest version of the versioned store at
-    * `<home>/ivf`; a pre-versioned flat home (the r12 shape) migrates
-    * on first serve — its rows republished coalesced as v1.
+    * Serves the latest version of the float-codec store at `<home>/ivf`.
     */
   def knnIvfSq8(spark: SparkSession, sfDir: String, nQueries: Int = 10, k: Int = 5,
                 nCells: Int = -1, nProbe: Int = -1): DataFrame = {
     val index = servedValidated(sq8Cache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("sq8", sfDir)
       val store = home + "/ivf"
-      ensureVersioned(spark, store,
-        publishLegacy =
-          if (legacyFlatExists(spark, home, "assigned"))
-            Some(() => Similarity.writeIvfVersioned(IvfIndex(
-              spark.read.parquet(s"$home/centroids"),
-              spark.read.parquet(s"$home/assigned")), store))
-          else None,
-        build = () => {
-          val deq = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
-            .select(col("vec_id"), expr("transform(codes, c -> c * scale)").as("embedding"))
-          Similarity.writeIvfVersioned(
-            Similarity.buildIvf(deq, cellsForBuild(spark, sfDir, nCells)), store)
-        })
+      ensurePublished(spark, store) {
+        val deq = Similarity.quantizeInt8(graft.Tables.embeddings(spark, sfDir))
+          .select(col("vec_id"), expr("transform(codes, c -> c * scale)").as("embedding"))
+        IvfStore.publish(Similarity.buildIvf(deq, cellsForBuild(spark, sfDir, nCells)), store)
+      }
       ServingLayouts.markComplete(home)
-      (home, Similarity.loadIvfVersioned(spark, store))
+      (home, IvfStore.load[IvfIndex](spark, store))
     }
     val queries = queriesOf(Similarity.prepared(graft.Tables.embeddings(spark, sfDir)), nQueries)
     // equi-join form for the same reason as knnIvf: a 10-query batch's
@@ -1873,34 +1216,21 @@ object AnnServing {
     val layout = servedValidated(pqCache, spark, sfDir) { () =>
       val home = ServingLayouts.dirFor("ivfpq", sfDir)
       val store = home + "/pq"
-      ensureVersioned(spark, store,
-        publishLegacy =
-          if (legacyFlatExists(spark, home, "codes"))
-            Some(() => {
-              val (c, p, cd) = Similarity.loadIvfPq(spark, home)
-              Similarity.writeIvfPqVersioned(c, p.codebooks, cd, store)
-            })
-          else None,
-        build = () => {
-          val emb = graft.Tables.embeddings(spark, sfDir)
-          // one count() pays for all build-time derivations (cells +
-          // codebook width + sub-quantizer count); serving reads geometry
-          // back from the layout
-          val n = emb.count()
-          val cells = if (nCells > 0) nCells else graft.ops.LshGeometry.ivf(n)._1
-          val kc = if (kCentroids > 0) kCentroids else graft.ops.LshGeometry.pq(n)
-          val dim = Similarity.prepared(emb).select(size(col("v"))).head().getInt(0)
-          val m = if (mSubs > 0) mSubs else graft.ops.LshGeometry.pqSubs(dim, n)
-          val index = Similarity.buildIvf(emb, cells)
-          val pq = Similarity.trainPq(emb, m, kc)
-          Similarity.writeIvfPqVersioned(index.centroids, pq.codebooks,
-            Similarity.pqCodesOf(index, pq), store)
-        })
+      ensurePublished(spark, store) {
+        val emb = graft.Tables.embeddings(spark, sfDir)
+        // one count() pays for all build-time derivations (cells +
+        // codebook width + sub-quantizer count); serving reads geometry
+        // back from the layout
+        val n = emb.count()
+        val cells = if (nCells > 0) nCells else graft.ops.LshGeometry.ivf(n)._1
+        val kc = if (kCentroids > 0) kCentroids else graft.ops.LshGeometry.pq(n)
+        val dim = Similarity.prepared(emb).select(size(col("v"))).head().getInt(0)
+        val m = if (mSubs > 0) mSubs else graft.ops.LshGeometry.pqSubs(dim, n)
+        IvfStore.publish(Similarity.ivfPq(Similarity.buildIvf(emb, cells),
+          Similarity.trainPq(emb, m, kc)), store)
+      }
       ServingLayouts.markComplete(home)
-      (home, {
-        val (c, p, cd) = Similarity.loadIvfPqVersioned(spark, store)
-        PqLayout(c, p, cd)
-      })
+      (home, IvfStore.load[IvfPqIndex](spark, store))
     }
     val base = Similarity.prepared(graft.Tables.embeddings(spark, sfDir))
     Similarity.queryIvfPq(layout.centroids, layout.pq, layout.codes,
@@ -1976,8 +1306,8 @@ object AnnServing {
     * corpus — the balance dashboard for a cell-partitioned ANN layout
     * (a skewed quantizer concentrates probes on hot cells and defeats
     * the nProbe/nCells pruning argument; this is the view that says
-    * "retrain the coarse quantizer" — and [[Similarity.rebuildIvf]] is
-    * the op that acts on it: offline refit, atomic version publish).
+    * "retrain the coarse quantizer" — and [[rebuildServedIvf]] is the
+    * op that acts on it: offline refit, atomic version publish).
     * One count-aggregation on the served index's assignment frame;
     * output is nCells rows. Driver-gated rows-only BY NECESSITY, not
     * choice: the DuckDB oracle cannot execute a KMeans fit, and the
@@ -2004,7 +1334,7 @@ object AnnServing {
     // deliberate operator decision: still report stored/derived so the
     // drift magnitude stays visible, but don't nag rebuild_recommended
     // forever over a chosen override (r12 advisor).
-    val explicitIntent = geometryIntentExplicit(spark, ivfStore(sfDir))
+    val explicitIntent = IvfStore.geometryIntentExplicit(spark, ivfStore(sfDir))
     val total = index.assigned.agg(count(lit(1)).as("__n"))
     index.assigned
       .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
@@ -2033,14 +1363,14 @@ object AnnServing {
     // published store is the one being served.
     ServingLayouts.homesFor("ivf", corpusDir).iterator
       .map(_ + "/ivf")
-      .find(store => Similarity.ivfVersions(spark, store).nonEmpty)
+      .find(store => IvfStore.versions(spark, store).nonEmpty)
       .map { store =>
-        val stored = Similarity.loadIvfVersioned(spark, store).nCells
+        val stored = IvfStore.load[IvfIndex](spark, store).nCells
         val derived = graft.ops.LshGeometry.ivf(
           graft.Tables.cachedCount(graft.Tables.embeddings(spark, corpusDir)))._1
         // same intent rule as [[ivfCellStats]]: an explicit-geometry
         // store reports its drift numbers but never recommends rebuild
         (stored, derived,
-          stored != derived && !geometryIntentExplicit(spark, store))
+          stored != derived && !IvfStore.geometryIntentExplicit(spark, store))
       }
 }

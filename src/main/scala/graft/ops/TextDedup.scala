@@ -222,7 +222,7 @@ object TextDedup {
     * nature, reshuffles to match — CI-locked in TextDedupSpec). Band
     * geometry rides along in a one-row meta table so a query can never
     * run with mismatched bands/rows. Mirrors the cell-partitioned IVF
-    * persistence (Similarity.writeIvfPartitioned).
+    * persistence ([[IvfStore]]).
     *
     * Bucketing metadata lives in the catalog, so tables are registered
     * as `<tablePrefix>_digests/_buckets/_shingles` with files at
@@ -630,7 +630,7 @@ object TextDedup {
       spark.read.parquet(s"$path/meta").head().getAs[Int]("span_words"))
 
   /** Append a batch's span digests to a persisted [[SpanIndex]] —
-    * the continuous-ingest growth path, symmetric to [[appendToIvfPq]]:
+    * the continuous-ingest growth path, symmetric to [[IvfStore.append]]:
     * only digests NOT already present are written (anti-join idempotence
     * guard, so a replayed batch is a no-op), and the append goes through
     * the catalog with the SAME bucketing spec, so the no-Exchange join

@@ -2,13 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
-import graft.ops.Similarity
+import graft.ops.{IvfStore, Similarity}
+import graft.ops.Similarity.IvfIndex
 
-/** Continuous vector ingest — the streaming face of
-  * [[graft.ops.Similarity.appendToIvfPartitioned]]: embedding batches
-  * land as files and each micro-batch is assigned against the stored
-  * coarse quantizer and appended into only the affected `cell=`
-  * partitions of the persisted IVF index. This is how a vector store
+/** Continuous vector ingest and serving over one float-codec
+  * [[graft.ops.IvfStore]] — version directories `v<8 digits>/` holding
+  * centroids and the cell-partitioned `assigned` rows, plus one sidecar
+  * with the change stamp, high-water mark, pending mark and file count.
+  * Embedding batches land as files and each micro-batch is assigned
+  * against the stored coarse quantizer and appended
+  * ([[graft.ops.IvfStore.append]]) into only the affected `cell=`
+  * partitions of the latest version. This is how a vector store
   * grows under continuous embedding production (the crawl→embed→index
   * tail of the pipeline) without ever rebuilding or re-shuffling the
   * indexed corpus: per-batch cost ∝ batch size, and serving queries
@@ -17,9 +21,9 @@ import graft.ops.Similarity
   *
   * Exactly-once is layered: the checkpoint makes each FILE processed
   * once per checkpoint lineage, and the append's high-water-mark
-  * redelivery guard ([[graft.ops.Similarity.appendToIvfPartitioned]],
-  * monotone form — one filter against the layout's stored hwm, cost
-  * ∝ batch and never corpus) makes redelivery with a fresh/lost
+  * redelivery guard ([[graft.ops.IvfStore.append]], monotone form —
+  * one filter against the sidecar's hwm, cost ∝ batch and never
+  * corpus) makes redelivery with a fresh/lost
   * checkpoint a no-op rather than a duplicate-candidate source — both
   * layers are spec-driven. The quantizer stays FIXED across appends
   * (spec-proven ≡ KMeans.transform); drift shows up in ivf_cell_stats
@@ -27,8 +31,8 @@ import graft.ops.Similarity
   */
 object EmbeddingStream {
 
-  /** Drain all staged embedding files into the persisted index at
-    * `indexPath` ([[graft.ops.Similarity.writeIvfPartitioned]] layout).
+  /** Drain all staged embedding files into the float-codec
+    * [[graft.ops.IvfStore]] at `indexPath`.
     * `Trigger.AvailableNow` processes the backlog and terminates; a
     * live deployment swaps in a processing-time trigger on the same
     * DAG and checkpoint.
@@ -50,10 +54,10 @@ object EmbeddingStream {
     * long-running ingest ratchets the layout's file count (measured
     * r15: 1 056 → 10 794 files over a 20-batch sf100 ingest) and
     * serving latency silently degrades into file-open overhead. When
-    * the layout's running file count exceeds `threshold × nCells`, the
-    * batch is followed by [[graft.ops.Similarity.compactIvfFlat]] — a
-    * generation-flip rewrite concurrent readers survive (they hold the
-    * previous generation, retired only one compaction later). 8 ≈
+    * the sidecar's file count exceeds `threshold × nCells`, the batch
+    * is followed by [[graft.ops.IvfStore.compact]] — the latest version
+    * republished coalesced as v+1, which concurrent readers survive
+    * (they hold version v, retired only one compaction later). 8 ≈
     * where the measured ~0.3 ms/open overhead reaches scan parity.
     * 0 disables (default): compaction cost sits on the ingest lane, so
     * it is the operator's explicit choice here or via Maintain.
@@ -67,8 +71,7 @@ object EmbeddingStream {
     val reader = spark.readStream.schema(schema)
     // the trigger denominator: cells are fixed model metadata (the
     // quantizer never refits in-stream), so count them once per drain
-    lazy val nCells =
-      spark.read.parquet(s"$indexPath/centroids").count()
+    lazy val nCells = IvfStore.load[IvfIndex](spark, indexPath).nCells
     (if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     else reader)
@@ -85,16 +88,15 @@ object EmbeddingStream {
           r
         }
         staged("append") {
-          Similarity.appendToIvfPartitioned(indexPath, batch, monotoneIds)
+          IvfStore.append[IvfIndex](indexPath, batch, monotoneIds)
         }
         if (autoCompactFilesPerCell > 0) {
-          val meta = Similarity.readIvfMeta(spark, indexPath)
-          // files < 0 = legacy layout without a counter: the trigger
-          // stays quiet until a write/compact initializes it
-          if (meta.files >= 0 && nCells > 0 &&
-              meta.files > autoCompactFilesPerCell * nCells)
+          // files < 0 = no readable sidecar: the trigger stays quiet
+          // until a publish/compact writes one
+          val files = IvfStore.readMeta(spark, indexPath).files
+          if (files >= 0 && nCells > 0 && files > autoCompactFilesPerCell * nCells)
             staged("auto_compact") {
-              Similarity.compactIvfFlat(spark, indexPath)
+              IvfStore.compact[IvfIndex](spark, indexPath)
             }
         }
         ()
@@ -105,19 +107,19 @@ object EmbeddingStream {
 
   /** Continuous ANN query serving — the other face of the persisted
     * index: QUERY vectors land as files, each micro-batch probes the
-    * stored cell-partitioned index ([[graft.ops.Similarity.queryIvf]] —
+    * store's latest version ([[graft.ops.Similarity.queryIvf]] —
     * centroids broadcast, only probed `cell=` partitions read) and the
     * top-k neighbor rows append to `destPath`. The index is reloaded
-    * ONLY when its change stamp moves ([[graft.ops.Similarity.ivfStampOf]]
-    * — every [[ingestOnce]] append bumps it): an unchanged-stamp batch
+    * ONLY when the sidecar's change stamp moves (every [[ingestOnce]]
+    * append and compaction bumps it): an unchanged-stamp batch
     * reuses the held reader, so steady-state serving pays one tiny
     * stamp read per micro-batch instead of re-listing the (at scale,
     * million-file) `assigned/` tree — the 100× form of the
     * ingest-while-serving loop, with the index directory the only
     * coupling. Appends are visible at the NEXT micro-batch after their
-    * bump, exactly as with the old per-batch re-read; a stampless
-    * legacy layout reads as -1, which never matches a held stamp, so
-    * it conservatively reloads every batch (the old behavior). A
+    * bump, exactly as with a per-batch re-read; a missing sidecar
+    * reads as -1, which never matches a held stamp, so it
+    * conservatively reloads every batch. A
     * query's result depends on nothing but itself and the index
     * snapshot, so batching never changes any row (spec: drained
     * stream ≡ batch query set when the index is quiescent). Results
@@ -141,7 +143,7 @@ object EmbeddingStream {
     // foreachBatch runs on the driver, sequentially per batch — plain
     // vars are safe and live for this query run only
     var servedStamp = Long.MinValue
-    var served: Similarity.IvfIndex = null
+    var served: IvfIndex = null
     var loads = 0
     src.writeStream
       .outputMode("append")
@@ -156,15 +158,13 @@ object EmbeddingStream {
           timingSink(batchId, stage, (System.nanoTime() - t0) / 1e6)
           r
         }
-        val stamp = staged("stamp_poll")(Similarity.ivfStampOf(spark, indexPath))
+        val stamp = staged("stamp_poll")(IvfStore.readMeta(spark, indexPath).stamp)
         if (served == null || stamp < 0 || stamp != servedStamp) {
           staged("index_load") {
-            // loadIvfFlat, not a bare `assigned` read: the live
-            // generation is resolved through the meta sidecar, so a
-            // compaction's generation flip (stamp bump) lands here like
-            // any append — and a reader pinned to the PREVIOUS
-            // generation stays valid until the compaction after next
-            served = Similarity.loadIvfFlat(spark, indexPath)
+            // the store resolves the latest version, so a compaction's
+            // v+1 (a stamp bump) lands here like any append — and the
+            // reader it replaces stays valid until the compaction after
+            served = IvfStore.load[IvfIndex](spark, indexPath)
           }
           servedStamp = stamp
           loads += 1

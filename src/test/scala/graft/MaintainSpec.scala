@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.{ResultCache, ServingLayouts, SnapshotTable}
-import graft.ops.Similarity
+import graft.ops.{IvfStore, Similarity}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
@@ -38,12 +38,12 @@ class MaintainSpec extends SparkSpec {
     val store = ivfHome + "/ivf"
     val emb = Tables.embeddings(spark, sfDir)
     val index = Similarity.buildIvf(emb, 4)
-    Similarity.writeIvfVersioned(index, store)
-    Similarity.writeIvfVersioned(index, store)
-    Similarity.writeIvfVersioned(index, store)
+    IvfStore.publish(index, store)
+    IvfStore.publish(index, store)
+    IvfStore.publish(index, store)
     ServingLayouts.markComplete(ivfHome)
     ServingLayouts.touch(ivfHome)
-    assert(Similarity.ivfVersions(spark, store).length === 3)
+    assert(IvfStore.versions(spark, store).length === 3)
 
     // ---- snapshot table whose history contains an UNREFERENCED file:
     // the upsert rewrites partition a, orphaning v1's a-file ----
@@ -73,7 +73,7 @@ class MaintainSpec extends SparkSpec {
       cacheRoots = Seq(cacheRoot), cacheTtlMs = 1000L)
 
     assert(report.ivfVersions === 2, "two superseded quantizer versions reclaimed")
-    assert(Similarity.ivfVersions(spark, store) === Seq(3L), "latest version survives")
+    assert(IvfStore.versions(spark, store) === Seq(3L), "latest version survives")
     assert(report.layouts >= 2, "stale layout + crashed stage reclaimed")
     assert(!Files.exists(Paths.get(staleDir)), "stale layout gone")
     assert(!Files.exists(Paths.get(crashedStage)), "crashed stage gone")
@@ -159,63 +159,9 @@ class MaintainSpec extends SparkSpec {
       compactIvfStore = true)
     assert(r2.ivfFragmentation === Some((4L, 4L, false)),
       s"compact latest version must be quiet, got ${r2.ivfFragmentation}")
-    assert(graft.ops.Similarity.ivfVersions(spark,
+    assert(IvfStore.versions(spark,
         ServingLayouts.dirFor("ivf", corpus) + "/ivf") === Seq(1L, 2L),
       "an already-compact store must not gain a version from --compact-ivf")
-  }
-
-  test("--compact-ivf migrates fragmented legacy flat sq8/pq homes and reclaims the flat dirs") {
-    // r16 (r15 verdict item 1): the compressed serving stores kept
-    // their pre-versioned FLAT layouts, which nothing could compact —
-    // the sf100 sq8/pq stores fossilized at 46k/22k slivers and served
-    // 4-10× slower than float IVF. Maintain now migrates a fragmented
-    // flat home: republish its rows coalesced as v1 of the versioned
-    // store (no model refit), reclaim the superseded flat dirs.
-    val corpus = Files.createTempDirectory("graft_mt_legacy").toString
-    val emb = Tables.embeddings(spark, sfDir)
-    val index = Similarity.buildIvf(emb, 4)
-    // fragmented flat sq8 home: unshuffled partitionBy sprays one
-    // sliver per (task × cell) — the exact r12 build defect
-    val sq8Home = ServingLayouts.dirFor("sq8", corpus)
-    index.assigned.repartition(16).write.partitionBy("cell").parquet(s"$sq8Home/assigned")
-    index.centroids.write.parquet(s"$sq8Home/centroids")
-    ServingLayouts.markComplete(sq8Home)
-    // fragmented flat pq home over the codes layout
-    val pqHome = ServingLayouts.dirFor("ivfpq", corpus)
-    val pq = Similarity.trainPq(emb, 4, 8)
-    val codes = Similarity.pqCodesOf(index, pq)
-    codes.repartition(16).write.partitionBy("cell").parquet(s"$pqHome/codes")
-    pq.codebooks.write.parquet(s"$pqHome/codebooks")
-    index.centroids.write.parquet(s"$pqHome/centroids")
-    ServingLayouts.markComplete(pqHome)
-    val sq8Rows = spark.read.parquet(s"$sq8Home/assigned").count()
-    val pqRows = spark.read.parquet(s"$pqHome/codes").count()
-
-    val r = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue,
-      compactIvfStore = true)
-    assert(r.sq8Fragmentation.exists(_._3),
-      s"slivered legacy sq8 home must read as fragmented: ${r.sq8Fragmentation}")
-    assert(r.pqFragmentation.exists(_._3),
-      s"slivered legacy pq home must read as fragmented: ${r.pqFragmentation}")
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L),
-      "migration publishes the flat rows as v1")
-    assert(Similarity.ivfVersions(spark, s"$pqHome/pq") === Seq(1L))
-    assert(!Files.exists(Paths.get(sq8Home, "assigned")) &&
-      !Files.exists(Paths.get(sq8Home, "centroids")) &&
-      !Files.exists(Paths.get(pqHome, "codes")),
-      "superseded flat dirs are reclaimed in the same run")
-    assert(r.legacyFlatReclaimed >= 5)
-    // row identity through the migration
-    assert(Similarity.loadIvfVersioned(spark, s"$sq8Home/ivf").assigned.count() === sq8Rows)
-    val (_, pqModel, migCodes) = Similarity.loadIvfPqVersioned(spark, s"$pqHome/pq")
-    assert(migCodes.count() === pqRows && pqModel.mSubs === 4)
-    // second run: versioned stores are compact now — quiet signal, no
-    // new version, nothing more to reclaim
-    val r2 = Maintain.run(spark, corpus, layoutAgeMs = Long.MaxValue,
-      compactIvfStore = true)
-    assert(r2.sq8Fragmentation.exists(!_._3) && r2.pqFragmentation.exists(!_._3))
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L))
-    assert(r2.legacyFlatReclaimed === 0)
   }
 
   test("sweep of a corpus with no serving state reclaims nothing and creates nothing") {

@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.Similarity
+import graft.ops.{IvfStore, Similarity}
+import graft.ops.Similarity.{IvfIndex, IvfPqIndex}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -169,16 +170,16 @@ class SimilaritySpec extends SparkSpec {
     // r12 sf100 build left 46 504 files for 2 M rows and serving paid
     // ~15 s/batch opening them)
     Similarity.writeIvfPartitioned(Similarity.buildIvf(e), dir)
-    val fresh = filesPerCell(s"$dir/assigned")
+    val fresh = filesPerCell(s"$dir/v00000001/assigned")
     assert(fresh.nonEmpty && fresh.values.forall(_ == 1),
       s"fresh layout must be one file per cell, got $fresh")
     // three appends: at most one NEW file per affected cell per batch
     val maxId = e.agg(smax("vec_id")).head.getLong(0)
     (1 to 3).foreach { i =>
-      Similarity.appendToIvfPartitioned(dir,
+      IvfStore.append[IvfIndex](dir,
         e.withColumn("vec_id", col("vec_id") + (maxId + 1) * i))
     }
-    val grown = filesPerCell(s"$dir/assigned")
+    val grown = filesPerCell(s"$dir/v00000001/assigned")
     assert(grown.values.forall(_ <= 4),
       s"3 appends may add at most 3 files per cell, got ${grown.values.max}")
     // fabricate a fragmented STORE version (the flat layout above, with
@@ -196,17 +197,17 @@ class SimilaritySpec extends SparkSpec {
         else java.nio.file.Files.copy(p, d)
       } finally w.close()
     }
-    cp(s"$dir/assigned", v1.resolve("assigned"))
-    cp(s"$dir/centroids", v1.resolve("centroids"))
-    val before = Similarity.loadIvfVersioned(spark, store)
+    cp(s"$dir/v00000001/assigned", v1.resolve("assigned"))
+    cp(s"$dir/v00000001/centroids", v1.resolve("centroids"))
+    val before = IvfStore.load[IvfIndex](spark, store)
     val rowsBefore = before.assigned.orderBy(col("vec_id")).collect().map(_.toSeq).toSeq
-    val v2 = Similarity.compactIvf(spark, store)
+    val v2 = IvfStore.compact[IvfIndex](spark, store)
     assert(v2 === 2L)
     val compacted = filesPerCell(
       java.nio.file.Paths.get(store, "v00000002", "assigned").toString)
     assert(compacted.values.forall(_ == 1),
       s"compacted version must be one file per cell, got $compacted")
-    val after = Similarity.loadIvfVersioned(spark, store)
+    val after = IvfStore.load[IvfIndex](spark, store)
     assert(after.assigned.orderBy(col("vec_id")).collect().map(_.toSeq).toSeq === rowsBefore,
       "compaction must not change a single row")
   }
@@ -249,7 +250,7 @@ class SimilaritySpec extends SparkSpec {
       scan.metadata.mkString("\n"))
     val files = scan.relation.location.listFiles(scan.partitionFilters, Nil)
       .flatMap(_.files)
-    val allFiles = new java.io.File(s"$dir/assigned").listFiles()
+    val allFiles = new java.io.File(s"$dir/v00000001/assigned").listFiles()
       .count(_.getName.startsWith("cell="))
     assert(files.nonEmpty && allFiles > 1)
     assert(files.forall(_.getPath.toString.contains("cell=0")),
@@ -324,7 +325,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.writeIvfPartitioned(
       Similarity.IvfIndex(built.centroids,
         built.assigned.join(half.select("vec_id"), Seq("vec_id"), "left_semi")), dir)
-    val appended = Similarity.appendToIvfPartitioned(dir, rest)
+    val appended = IvfStore.append[IvfIndex](dir, rest)
     val c = Similarity.queryIvf(appended, q(appended), excludeSelf = true)
       .collect().map(_.toSeq).toSeq
     assert(c === a)
@@ -404,8 +405,8 @@ class SimilaritySpec extends SparkSpec {
     val ivf = Similarity.buildIvf(e)
     val pq = Similarity.trainPq(e)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.writeIvfPq(ivf, pq, dir)
-    val (centroids, pqLoaded, codes) = Similarity.loadIvfPq(spark, dir)
+    IvfStore.publish(Similarity.ivfPq(ivf, pq), dir)
+    val IvfPqIndex(centroids, pqLoaded, codes) = IvfStore.load[IvfPqIndex](spark, dir)
     assert(pqLoaded.mSubs === pq.mSubs && pqLoaded.subDim === pq.subDim)
     val queries = Similarity.prepared(e).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
@@ -432,19 +433,19 @@ class SimilaritySpec extends SparkSpec {
     val ivf = Similarity.buildIvf(initial)
     val pq = Similarity.trainPq(initial)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_app").toString
-    Similarity.writeIvfPq(ivf, pq, dir)
-    val before = new java.io.File(s"$dir/codes").listFiles()
+    IvfStore.publish(Similarity.ivfPq(ivf, pq), dir)
+    val before = new java.io.File(s"$dir/v00000001/codes").listFiles()
       .filter(_.getName.startsWith("cell=")).flatMap(_.listFiles())
       .map(_.getAbsolutePath).toSet
-    Similarity.appendToIvfPq(dir, batch)
+    IvfStore.append[IvfPqIndex](dir, batch)
     // existing files untouched, new files appended
-    val after = new java.io.File(s"$dir/codes").listFiles()
+    val after = new java.io.File(s"$dir/v00000001/codes").listFiles()
       .filter(_.getName.startsWith("cell=")).flatMap(_.listFiles())
       .map(_.getAbsolutePath).toSet
     assert(before.subsetOf(after) && after.size > before.size)
     // the grown stored index serves exactly like the in-memory union
     // encoded with the same fixed models
-    val (centroids, pqL, codes) = Similarity.loadIvfPq(spark, dir)
+    val IvfPqIndex(centroids, pqL, codes) = IvfStore.load[IvfPqIndex](spark, dir)
     assert(codes.count() === e.count())
     val grownIvf = Similarity.appendToIvf(ivf, batch)
     val memCodes = Similarity.encodePq(pq, grownIvf.assigned)
@@ -471,12 +472,12 @@ class SimilaritySpec extends SparkSpec {
     val ivf = Similarity.buildIvf(initial)
     val pq = Similarity.trainPq(initial)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_hwm").toString
-    Similarity.writeIvfPq(ivf, pq, dir)
-    Similarity.appendToIvfPq(dir, batch, monotoneIds = true)
-    val m1 = Similarity.readIvfMeta(spark, dir)
+    IvfStore.publish(Similarity.ivfPq(ivf, pq), dir)
+    IvfStore.append[IvfPqIndex](dir, batch, monotoneIds = true)
+    val m1 = IvfStore.readMeta(spark, dir)
     assert(m1.hwm === Some(n - 1) && m1.pending.isEmpty,
       "the first monotone append must initialize and promote the hwm")
-    assert(spark.read.parquet(s"$dir/codes").count() === n)
+    assert(IvfStore.load[IvfPqIndex](spark, dir).codes.count() === n)
     // lost checkpoint → full redelivery: the guard must no-op from the
     // sidecar alone, scanning ZERO stored code rows
     val scannedRows = new java.util.concurrent.atomic.AtomicLong(0)
@@ -493,7 +494,8 @@ class SimilaritySpec extends SparkSpec {
                              ns: Long): Unit =
         walk(qe.executedPlan).foreach {
           case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains(s"$dir/codes")) =>
+            if s.relation.location.rootPaths.exists(p =>
+              p.toString.contains(dir) && p.toString.endsWith("/codes")) =>
             scannedRows.addAndGet(s.metrics.get("numOutputRows").map(_.value).getOrElse(0L))
           case _ => ()
         }
@@ -503,22 +505,22 @@ class SimilaritySpec extends SparkSpec {
     }
     spark.listenerManager.register(tap)
     try {
-      Similarity.appendToIvfPq(dir, batch, monotoneIds = true)
+      IvfStore.append[IvfPqIndex](dir, batch, monotoneIds = true)
       Thread.sleep(2000) // listener delivery is async
     } finally spark.listenerManager.unregister(tap)
-    assert(spark.read.parquet(s"$dir/codes").count() === n, "redelivery must be a no-op")
+    assert(IvfStore.load[IvfPqIndex](spark, dir).codes.count() === n, "redelivery must be a no-op")
     assert(scannedRows.get() === 0L,
       s"the hwm guard must not scan stored codes on redelivery, scanned ${scannedRows.get()}")
     // crash AFTER data commit, BEFORE promote: pending staked, rows on
     // disk — redelivery verifies exactly the (h, hwm] window, no dupes
-    val done = Similarity.readIvfMeta(spark, dir)
-    Similarity.writeIvfMeta(spark, dir,
+    val done = IvfStore.readMeta(spark, dir)
+    IvfStore.writeMeta(spark, dir,
       done.copy(hwm = Some(n / 2 - 1), pending = Some(n - 1)))
-    Similarity.appendToIvfPq(dir, batch, monotoneIds = true)
-    val codes = spark.read.parquet(s"$dir/codes")
+    IvfStore.append[IvfPqIndex](dir, batch, monotoneIds = true)
+    val codes = IvfStore.load[IvfPqIndex](spark, dir).codes
     assert(codes.count() === n && codes.select("vec_id").distinct().count() === n,
       "no duplicate code rows after crash-window redelivery")
-    val resolved = Similarity.readIvfMeta(spark, dir)
+    val resolved = IvfStore.readMeta(spark, dir)
     assert(resolved.hwm === Some(n - 1) && resolved.pending.isEmpty,
       "the verified pending mark must promote into hwm")
   }
@@ -601,16 +603,16 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val e = Tables.embeddings(spark, sfDir)
     val store = java.nio.file.Files.createTempDirectory("graft_ivf_ver").toString + "/ivf"
-    assert(Similarity.writeIvfVersioned(Similarity.buildIvf(e, 16), store) === 1L)
-    val pinned = Similarity.loadIvfVersioned(spark, store)
+    assert(IvfStore.publish(Similarity.buildIvf(e, 16), store) === 1L)
+    val pinned = IvfStore.load[IvfIndex](spark, store)
     def q(ix: Similarity.IvfIndex) = ix.assigned.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
     val before = Similarity.queryIvf(pinned, q(pinned), excludeSelf = true)
       .collect().map(_.toSeq).toSeq
 
     // retrain with a different geometry and publish as v2
-    assert(Similarity.rebuildIvf(spark, store, nCells = 8) === 2L)
-    assert(Similarity.ivfVersions(spark, store) === Seq(1L, 2L))
+    assert(IvfStore.publish(Similarity.buildIvf(e, 8), store) === 2L)
+    assert(IvfStore.versions(spark, store) === Seq(1L, 2L))
 
     // the pinned reader still evaluates against v1 — old-or-new, no mix
     val after = Similarity.queryIvf(pinned, q(pinned), excludeSelf = true)
@@ -618,7 +620,7 @@ class SimilaritySpec extends SparkSpec {
     assert(after === before, "a reader pinned pre-rebuild must see the old index unchanged")
 
     // a fresh load serves the rebuilt quantizer, internally consistent
-    val fresh = Similarity.loadIvfVersioned(spark, store)
+    val fresh = IvfStore.load[IvfIndex](spark, store)
     assert(fresh.centroids.count() === 8L)
     assert(fresh.assigned.select("cell").distinct()
       .join(fresh.centroids, Seq("cell"), "left_anti").count() === 0,
@@ -642,28 +644,27 @@ class SimilaritySpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(store, ".tmp-crashed"))
-    assert(Similarity.ivfVersions(spark, store) === Seq(1L, 2L))
-    assert(Similarity.loadIvfVersioned(spark, store).centroids.count() === 8L)
+    assert(IvfStore.versions(spark, store) === Seq(1L, 2L))
+    assert(IvfStore.load[IvfIndex](spark, store).centroids.count() === 8L)
 
     // GC: superseded v1 and the torn staging reclaim; v2 stays served
-    assert(Similarity.vacuumIvfVersions(spark, store) === 2,
+    assert(IvfStore.vacuum(spark, store) === 2,
       "vacuum must reclaim the superseded version AND the torn staging")
-    assert(Similarity.ivfVersions(spark, store) === Seq(2L))
+    assert(IvfStore.versions(spark, store) === Seq(2L))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(store, ".tmp-crashed")))
-    val survivor = Similarity.loadIvfVersioned(spark, store)
+    val survivor = IvfStore.load[IvfIndex](spark, store)
     assert(survivor.centroids.count() === 8L &&
       survivor.assigned.count() === e.count(),
       "the retained latest version must stay fully readable")
     // idempotent when nothing is reclaimable; never deletes the latest
-    assert(Similarity.vacuumIvfVersions(spark, store) === 0)
+    assert(IvfStore.vacuum(spark, store) === 0)
     intercept[IllegalArgumentException] {
-      Similarity.vacuumIvfVersions(spark, store, keepVersions = 0)
+      IvfStore.vacuum(spark, store, keepVersions = 0)
     }
-    assert(Similarity.ivfVersions(spark, store) === Seq(2L))
+    assert(IvfStore.versions(spark, store) === Seq(2L))
   }
 
   test("geometry intent publishes atomically inside the version directory") {
-    import graft.ops.AnnServing
     // r13 advisor: a store-level marker written AFTER the version
     // rename could be lost on a crash between publish and marker (an
     // explicit-geometry store then nags rebuild_recommended forever)
@@ -671,22 +672,22 @@ class SimilaritySpec extends SparkSpec {
     // intent and version publish under ONE atomic rename.
     val store = java.nio.file.Files.createTempDirectory("graft_intent").toString + "/ivf"
     val e = Tables.embeddings(spark, sfDir)
-    Similarity.writeIvfVersioned(Similarity.buildIvf(e, 16), store)
-    assert(!AnnServing.geometryIntentExplicit(spark, store),
+    IvfStore.publish(Similarity.buildIvf(e, 16), store)
+    assert(!IvfStore.geometryIntentExplicit(spark, store),
       "a marker-less store defaults to derived intent")
-    Similarity.writeIvfVersioned(Similarity.buildIvf(e, 8), store,
+    IvfStore.publish(Similarity.buildIvf(e, 8), store,
       geometryIntent = Some(true))
     assert(new java.io.File(s"$store/v00000002/_geometry_intent").exists(),
       "the marker must live inside the version it describes")
-    assert(AnnServing.geometryIntentExplicit(spark, store))
-    // a marker-less later publish (generic rebuildIvf) inherits the
-    // newest DECLARED intent instead of silently flipping it
-    assert(Similarity.rebuildIvf(spark, store, nCells = 8) === 3L)
-    assert(AnnServing.geometryIntentExplicit(spark, store))
+    assert(IvfStore.geometryIntentExplicit(spark, store))
+    // a marker-less later publish inherits the newest DECLARED intent
+    // instead of silently flipping it
+    assert(IvfStore.publish(Similarity.buildIvf(e, 8), store) === 3L)
+    assert(IvfStore.geometryIntentExplicit(spark, store))
     // a later derived-intent publish re-arms drift flagging
-    Similarity.writeIvfVersioned(Similarity.buildIvf(e, 8), store,
+    IvfStore.publish(Similarity.buildIvf(e, 8), store,
       geometryIntent = Some(false))
-    assert(!AnnServing.geometryIntentExplicit(spark, store))
+    assert(!IvfStore.geometryIntentExplicit(spark, store))
   }
 
   test("served-IVF rebuild flips the serving layer to the new quantizer") {
@@ -788,75 +789,6 @@ class SimilaritySpec extends SparkSpec {
     // returning to the derived geometry re-arms the drift logic
     AnnServing.rebuildServedIvf(spark, dir)
     assert(AnnServing.ivfGeometryDrift(spark, dir) === Some((expect, expect, false)))
-  }
-
-  test("legacy flat sq8/pq stores migrate to versioned on first serve, row-identically") {
-    import graft.ops.AnnServing
-    import graft.sources.ServingLayouts
-    import org.apache.spark.sql.functions.col
-    // r16: the compressed serving families joined float-IVF's versioned
-    // store (the r12 flat layouts could not be compacted atomically and
-    // fossilized at 46k/22k slivers at sf100). A pre-versioned flat
-    // home must keep serving: first serve republishes its rows
-    // coalesced as v1 — migration IS the compaction, no model refit —
-    // and the results are the flat layout's own, row for row.
-    val corpus = java.nio.file.Files.createTempDirectory("graft_migr_corpus")
-    def copyRec(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(src)) {
-        java.nio.file.Files.createDirectories(dst)
-        val s = java.nio.file.Files.list(src)
-        try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-          .foreach(c => copyRec(c, dst.resolve(c.getFileName)))
-        finally s.close()
-      } else java.nio.file.Files.copy(src, dst)
-    }
-    copyRec(java.nio.file.Paths.get(sfDir, "embeddings.parquet"),
-      corpus.resolve("embeddings.parquet"))
-    val dir = corpus.toString
-    val e = Tables.embeddings(spark, dir)
-    val queries = Similarity.prepared(e).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm2").as("qn2"))
-
-    // ---- sq8: fabricate the legacy flat home (the r12 store shape) ----
-    val sq8Home = ServingLayouts.dirFor("sq8", dir)
-    val deq = Similarity.quantizeInt8(e)
-      .select(col("vec_id"),
-        org.apache.spark.sql.functions.expr("transform(codes, c -> c * scale)").as("embedding"))
-    Similarity.writeIvfPartitioned(Similarity.buildIvf(deq, 16), sq8Home)
-    ServingLayouts.markComplete(sq8Home)
-    val sq8Expected = Similarity.queryIvf(Similarity.loadIvfFlat(spark, sq8Home),
-      queries, 5, graft.ops.LshGeometry.ivfProbe(16), excludeSelf = true)
-      .collect().map(_.toSeq).toSeq
-    val sq8Served = AnnServing.knnIvfSq8(spark, dir).collect().map(_.toSeq).toSeq
-    assert(Similarity.ivfVersions(spark, s"$sq8Home/ivf") === Seq(1L),
-      "first serve must publish the flat rows as v1 of the versioned store")
-    assert(sq8Served === sq8Expected && sq8Served.nonEmpty,
-      "migration must serve the flat layout's rows identically")
-    // v1 is the COALESCED form: one file per cell
-    val v1assigned = java.nio.file.Paths.get(sq8Home, "ivf", "v00000001", "assigned")
-    import scala.jdk.CollectionConverters._
-    val cellDirs = java.nio.file.Files.list(v1assigned).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("cell=")).toSeq
-    assert(cellDirs.nonEmpty && cellDirs.forall { d =>
-      val s = java.nio.file.Files.list(d)
-      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) == 1
-      finally s.close()
-    }, "the migrated version must be one file per cell")
-
-    // ---- pq: same lifecycle over the codes layout ----
-    val pqHome = ServingLayouts.dirFor("ivfpq", dir)
-    val ivf = Similarity.buildIvf(e, 16)
-    val pq = Similarity.trainPq(e)
-    Similarity.writeIvfPq(ivf, pq, pqHome)
-    ServingLayouts.markComplete(pqHome)
-    val (fc, fpq, fcodes) = Similarity.loadIvfPq(spark, pqHome)
-    val pqExpected = Similarity.queryIvfPq(fc, fpq, fcodes, queries,
-      Similarity.prepared(e), 5, graft.ops.LshGeometry.ivfProbe(16),
-      graft.ops.LshGeometry.pqRerank(16), excludeSelf = true)
-      .collect().map(_.toSeq).toSeq
-    val pqServed = AnnServing.knnIvfPq(spark, dir).collect().map(_.toSeq).toSeq
-    assert(Similarity.ivfVersions(spark, s"$pqHome/pq") === Seq(1L))
-    assert(pqServed === pqExpected && pqServed.nonEmpty)
   }
 
   test("lsh bucket cache: a second call retires exactly the previous occupant") {

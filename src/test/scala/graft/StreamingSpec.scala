@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.Ingest
+import graft.ops.{Ingest, IvfStore}
+import graft.ops.Similarity.IvfIndex
 import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
 
@@ -599,26 +600,27 @@ class StreamingSpec extends SparkSpec {
     late.coalesce(1).write.mode("overwrite").parquet(src)
 
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt)
-    val grown = spark.read.parquet(s"$idxPath/assigned")
+    val grown = Similarity.loadIvfFlat(spark, idxPath).assigned
     assert(grown.count() === n)
     // stream-grown persisted assignment ≡ the in-memory append against
     // the same stored centroids (cell-for-cell)
+    val stored = Similarity.loadIvfFlat(spark, idxPath)
     val mem = Similarity.appendToIvf(
       Similarity.IvfIndex(
-        spark.read.parquet(s"$idxPath/centroids"),
-        spark.read.parquet(s"$idxPath/assigned").filter(col("vec_id") < n / 2)),
+        stored.centroids,
+        stored.assigned.filter(col("vec_id") < n / 2)),
       late)
     val got = grown.select("vec_id", "cell").as[(Long, Int)].collect().toSet
     val want = mem.assigned.select("vec_id", "cell").as[(Long, Int)].collect().toSet
     assert(got === want)
     // layer 1: same checkpoint → files already committed → no-op
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n)
+    assert(Similarity.loadIvfFlat(spark, idxPath).assigned.count() === n)
     // layer 2: LOST checkpoint (redelivery) → the vec_id anti-join
     // guard drops the whole replayed batch before any file lands
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_emb_ckpt2").toString
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt2)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n)
+    assert(Similarity.loadIvfFlat(spark, idxPath).assigned.count() === n)
   }
 
   test("streamed ANN queries against the persisted index equal the batch query set") {
@@ -640,9 +642,7 @@ class StreamingSpec extends SparkSpec {
       "quiescent index: unchanged-stamp micro-batches must skip the reload")
     val streamed = spark.read.parquet(dest).drop("batch_id")
       .orderBy("query_id", "rnk").collect().toSeq
-    val index = Similarity.IvfIndex(
-      spark.read.parquet(s"$idxPath/centroids"),
-      spark.read.parquet(s"$idxPath/assigned"))
+    val index = Similarity.loadIvfFlat(spark, idxPath)
     val batchQ = Similarity.prepared(queries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("norm2").as("qn2"))
@@ -666,7 +666,7 @@ class StreamingSpec extends SparkSpec {
     val rest = emb.filter(col("vec_id") % 2 === 1)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_poll_idx").toString
     Similarity.writeIvfPartitioned(Similarity.buildIvf(half), idxPath)
-    assert(Similarity.ivfStampOf(spark, idxPath) === 1L, "fresh layout stamps at 1")
+    assert(IvfStore.readMeta(spark, idxPath).stamp === 1L, "fresh layout stamps at 1")
     val queries = emb.filter(col("vec_id") < 6)
     val src = java.nio.file.Files.createTempDirectory("graft_poll_src").toString
     queries.repartition(3).write.mode("overwrite").parquet(src)
@@ -676,8 +676,8 @@ class StreamingSpec extends SparkSpec {
       maxFilesPerTrigger = 1) === 1,
       "three quiescent micro-batches, one load")
     // grow the index: the append bumps the stamp
-    Similarity.appendToIvfPartitioned(idxPath, rest)
-    assert(Similarity.ivfStampOf(spark, idxPath) === 2L, "append must bump the stamp")
+    IvfStore.append[IvfIndex](idxPath, rest)
+    assert(IvfStore.readMeta(spark, idxPath).stamp === 2L, "append must bump the stamp")
     // a new drain of the same queries must serve the GROWN snapshot
     val dest2 = java.nio.file.Files.createTempDirectory("graft_poll_d2").toString + "/out"
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft_poll_c2").toString
@@ -685,9 +685,7 @@ class StreamingSpec extends SparkSpec {
       maxFilesPerTrigger = 1) === 1)
     val streamed2 = spark.read.parquet(dest2).drop("batch_id")
       .orderBy("query_id", "rnk").collect().toSeq
-    val full = Similarity.IvfIndex(
-      spark.read.parquet(s"$idxPath/centroids"),
-      spark.read.parquet(s"$idxPath/assigned"))
+    val full = Similarity.loadIvfFlat(spark, idxPath)
     val batch2 = Similarity.queryIvf(full, Similarity.prepared(queries)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
           col("norm2").as("qn2")))
@@ -737,14 +735,14 @@ class StreamingSpec extends SparkSpec {
     val late = emb.filter(col("vec_id") >= n / 2)
     val idxPath = java.nio.file.Files.createTempDirectory("graft_hwm_idx").toString
     Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idxPath)
-    assert(Similarity.readIvfMeta(spark, idxPath).hwm === Some(n / 2 - 1),
+    assert(IvfStore.readMeta(spark, idxPath).hwm === Some(n / 2 - 1),
       "a fresh write must record the layout's high-water mark")
     val src = java.nio.file.Files.createTempDirectory("graft_hwm_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_hwm_ck").toString
     late.coalesce(1).write.mode("overwrite").parquet(src)
     EmbeddingStream.ingestOnce(spark, src, idxPath, ckpt)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n)
-    assert(Similarity.readIvfMeta(spark, idxPath).hwm === Some(n - 1),
+    assert(Similarity.loadIvfFlat(spark, idxPath).assigned.count() === n)
+    assert(IvfStore.readMeta(spark, idxPath).hwm === Some(n - 1),
       "the append must promote the high-water mark")
     // lost checkpoint → full redelivery. Tap every executed scan of the
     // stored assigned tree: the hwm guard must produce the no-op from
@@ -763,7 +761,8 @@ class StreamingSpec extends SparkSpec {
                              ns: Long): Unit =
         walk(qe.executedPlan).foreach {
           case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains(s"$idxPath/assigned")) =>
+            if s.relation.location.rootPaths.exists(p =>
+              p.toString.contains(idxPath) && p.toString.endsWith("/assigned")) =>
             scannedRows.addAndGet(s.metrics.get("numOutputRows").map(_.value).getOrElse(0L))
           case _ => ()
         }
@@ -779,7 +778,7 @@ class StreamingSpec extends SparkSpec {
       // beat before reading the accumulated scan mass
       Thread.sleep(2000)
     } finally spark.listenerManager.unregister(tap)
-    assert(spark.read.parquet(s"$idxPath/assigned").count() === n,
+    assert(Similarity.loadIvfFlat(spark, idxPath).assigned.count() === n,
       "redelivery must be a no-op")
     assert(scannedRows.get() === 0L,
       s"the hwm guard must not scan stored ids on redelivery, scanned ${scannedRows.get()}")
@@ -825,7 +824,7 @@ class StreamingSpec extends SparkSpec {
     EmbeddingStream.ingestOnce(spark, okSrc, idx1,
       java.nio.file.Files.createTempDirectory("graft_mono_ck1").toString,
       maxFilesPerTrigger = 1)
-    assert(spark.read.parquet(s"$idx1/assigned").count() === n,
+    assert(Similarity.loadIvfFlat(spark, idx1).assigned.count() === n,
       "an ascending multi-file backlog must fully land under the hwm guard")
     // the SAME rows interleaved (high range first) — contract violated:
     // the exact anti-join form must land them all
@@ -835,7 +834,7 @@ class StreamingSpec extends SparkSpec {
     EmbeddingStream.ingestOnce(spark, badSrc, idx2,
       java.nio.file.Files.createTempDirectory("graft_mono_ck2").toString,
       maxFilesPerTrigger = 1, monotoneIds = false)
-    assert(spark.read.parquet(s"$idx2/assigned").count() === n,
+    assert(Similarity.loadIvfFlat(spark, idx2).assigned.count() === n,
       "an out-of-order backlog must fully land under the anti-join form")
   }
 
@@ -853,15 +852,15 @@ class StreamingSpec extends SparkSpec {
       !(col("vec_id") >= n / 4 && col("vec_id") < n / 3))
     val idx = java.nio.file.Files.createTempDirectory("graft_straddle_idx").toString
     Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx)
-    assert(Similarity.readIvfMeta(spark, idx).hwm === Some(n / 2 - 1))
+    assert(IvfStore.readMeta(spark, idx).hwm === Some(n / 2 - 1))
     // the violating batch: the hole (ids ≤ hwm, NOT stored) + new high
     // ids + a stored redelivered slice — straddles the hwm
     val batch = emb.filter(
       (col("vec_id") >= n / 4 && col("vec_id") < n / 3) ||   // new, low
         col("vec_id") >= n / 2 ||                            // new, high
         col("vec_id") < n / 8)                               // redelivered
-    Similarity.appendToIvfPartitioned(idx, batch, monotoneIds = true)
-    val assigned = spark.read.parquet(s"$idx/assigned")
+    IvfStore.append[IvfIndex](idx, batch, monotoneIds = true)
+    val assigned = Similarity.loadIvfFlat(spark, idx).assigned
     assert(assigned.count() === n, "the hole's rows must land exactly once")
     assert(assigned.select("vec_id").distinct().count() === n,
       "redelivered rows must not duplicate under the fallback")
@@ -879,34 +878,35 @@ class StreamingSpec extends SparkSpec {
     val h = n / 2 - 1
     // CASE 1 — crash AFTER the append's data job committed, BEFORE the
     // promote: batchA's rows are on disk, hwm still h, pending staked.
-    Similarity.appendToIvfPartitioned(idx, batchA, monotoneIds = true)
-    val done = Similarity.readIvfMeta(spark, idx)
+    IvfStore.append[IvfIndex](idx, batchA, monotoneIds = true)
+    val done = IvfStore.readMeta(spark, idx)
     assert(done.hwm === Some(n - 1) && done.pending.isEmpty)
-    Similarity.writeIvfMeta(spark, idx,
+    IvfStore.writeMeta(spark, idx,
       done.copy(hwm = Some(h), pending = Some(n - 1)))
     // redelivery: the recovery anti-join verifies exactly the (h, n-1]
     // window — nothing lands twice, and the mark resolves
-    Similarity.appendToIvfPartitioned(idx, batchA, monotoneIds = true)
-    val assigned = spark.read.parquet(s"$idx/assigned")
+    IvfStore.append[IvfIndex](idx, batchA, monotoneIds = true)
+    val assigned = Similarity.loadIvfFlat(spark, idx).assigned
     assert(assigned.count() === n, "no duplicates after crash-window redelivery")
     assert(assigned.select("vec_id").distinct().count() === n)
-    val resolved = Similarity.readIvfMeta(spark, idx)
+    val resolved = IvfStore.readMeta(spark, idx)
     assert(resolved.hwm === Some(n - 1) && resolved.pending.isEmpty,
       "the verified pending mark must promote into hwm")
     // CASE 2 — crash BEFORE the data job: pending staked, no rows on
     // disk. Redelivery must land the batch exactly once.
     val idx2 = java.nio.file.Files.createTempDirectory("graft_pend_idx2").toString
     Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx2)
-    val m2 = Similarity.readIvfMeta(spark, idx2)
-    Similarity.writeIvfMeta(spark, idx2, m2.copy(pending = Some(n - 1)))
-    Similarity.appendToIvfPartitioned(idx2, batchA, monotoneIds = true)
-    assert(spark.read.parquet(s"$idx2/assigned").count() === n,
+    val m2 = IvfStore.readMeta(spark, idx2)
+    IvfStore.writeMeta(spark, idx2, m2.copy(pending = Some(n - 1)))
+    IvfStore.append[IvfIndex](idx2, batchA, monotoneIds = true)
+    assert(Similarity.loadIvfFlat(spark, idx2).assigned.count() === n,
       "a staked-but-uncommitted batch must land on redelivery")
     // and the grown layout equals the in-memory append cell-for-cell
+    val stored2 = Similarity.loadIvfFlat(spark, idx2)
     val mem = Similarity.appendToIvf(Similarity.IvfIndex(
-      spark.read.parquet(s"$idx2/centroids"),
-      spark.read.parquet(s"$idx2/assigned").filter(col("vec_id") < n / 2)), batchA)
-    assert(spark.read.parquet(s"$idx2/assigned").select("vec_id", "cell")
+      stored2.centroids,
+      stored2.assigned.filter(col("vec_id") < n / 2)), batchA)
+    assert(stored2.assigned.select("vec_id", "cell")
         .as[(Long, Int)].collect().toSet ===
       mem.assigned.select("vec_id", "cell").as[(Long, Int)].collect().toSet)
   }
@@ -920,7 +920,7 @@ class StreamingSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < n / 4)
     val idx = java.nio.file.Files.createTempDirectory("graft_ac_idx").toString
     Similarity.writeIvfPartitioned(Similarity.buildIvf(base), idx)
-    val nCells = spark.read.parquet(s"$idx/centroids").count()
+    val nCells = Similarity.loadIvfFlat(spark, idx).nCells
     // a reader loaded BEFORE any compaction — generation 0
     val pinned = Similarity.loadIvfFlat(spark, idx)
     // three single-file batches at threshold 2: files/cell walks
@@ -935,8 +935,9 @@ class StreamingSpec extends SparkSpec {
     }
     EmbeddingStream.ingestOnce(spark, src, idx, ckpt, maxFilesPerTrigger = 1,
       autoCompactFilesPerCell = 2)
-    val meta = Similarity.readIvfMeta(spark, idx)
-    assert(meta.gen === 1, s"expected exactly one generation flip, got ${meta.gen}")
+    val meta = IvfStore.readMeta(spark, idx)
+    assert(IvfStore.versions(spark, idx).last === 2L,
+      s"expected exactly one version flip, got ${IvfStore.versions(spark, idx)}")
     assert(meta.files <= 2 * nCells,
       s"file count must stay bounded without a manual step: ${meta.files} files / $nCells cells")
     // the pinned pre-compaction reader still serves (its directory is
@@ -957,10 +958,10 @@ class StreamingSpec extends SparkSpec {
     assert(liveSet === memSet, "compaction must preserve assignments exactly")
     // ONE MORE compaction retires generation 0 — the documented
     // retention: a reader more than one compaction behind rebuilds
-    Similarity.compactIvfFlat(spark, idx)
-    assert(Similarity.readIvfMeta(spark, idx).gen === 2)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "assigned")),
-      "generation n-2 must be retired")
+    IvfStore.compact[IvfIndex](spark, idx)
+    assert(IvfStore.versions(spark, idx).last === 3L)
+    assert(!IvfStore.versions(spark, idx).contains(1L),
+      "version n-2 must be retired")
     assert(Similarity.loadIvfFlat(spark, idx).assigned.count() === base.count() + 3 * n)
   }
 
